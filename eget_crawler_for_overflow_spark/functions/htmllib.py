@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import os
 import re
+import string
 from html import unescape
 from html.parser import HTMLParser
 
@@ -237,6 +238,7 @@ _ATTR_RE = re.compile(
     r"(?:\s*=\s*(\"([^\"]*)\"|'([^']*)'|([^\s>]+)))?"
 )
 _RAWTEXT = {"script": "</script", "style": "</style", "textarea": "</textarea"}
+_ASCII_LOWER = str.maketrans(string.ascii_uppercase, string.ascii_lowercase)
 
 
 def _parse_attrs(s: str) -> dict[str, str]:
@@ -266,7 +268,7 @@ def parse_html_fast(html: str) -> Node:
     stack = [root]
     i, n = 0, len(html)
     ordc = 0
-    lo = None  # html.lower(), computed once on first rawtext element
+    lo = None  # case-folded html, computed once on first rawtext element
 
     def data(text: str) -> None:
         if text:
@@ -325,6 +327,10 @@ def parse_html_fast(html: str) -> Node:
         if raw_end is not None:
             if lo is None:
                 lo = html.lower()
+                if len(lo) != len(html):
+                    # U+0130 lowers to two chars, which would shift every
+                    # later offset: fold ASCII only (the close tags are ASCII)
+                    lo = html.translate(_ASCII_LOWER)
             end = lo.find(raw_end, i)
             if end < 0:
                 node.append(Node(None, {"text": html[i:]}))

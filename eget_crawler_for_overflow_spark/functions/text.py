@@ -2,15 +2,21 @@
 training-data-pipeline scalar functions (language-ID, quality scoring,
 token counting, fingerprinting).
 
-Design rule: anything expressible with built-in ``pyspark.sql.functions``
-stays JVM-side (whole-stage codegen); Python appears only where semantics
-require it (Python ``re`` for md_clean parity) and then always as an
-Arrow-batched pandas UDF.
+Design rule: per-row word-level features run as one Arrow-batched pandas
+UDF pass, because Catalyst lambdas (``filter``/``aggregate``) over a split
+array run interpreted, row at a time, with no codegen. Language id, word
+and stopword counts and the quality bucket share one pass
+(``text_features_udf``) that splits and counts each text once; the token
+counters below are still Catalyst lambdas. Set-level and character-level
+work (lengths, md5) stays JVM-side as built-in ``pyspark.sql.functions``.
+Python ``re`` appears where semantics require it (md_clean parity), also
+Arrow-batched.
 """
 
 from __future__ import annotations
 
 import re
+from collections import Counter
 
 import pandas as pd
 from pyspark.sql import Column
@@ -49,9 +55,9 @@ def clean_markdown_udf(md: pd.Series) -> pd.Series:
 
 
 # ---------------------------------------------------------------------------
-# language-ID: marker-word n-gram heuristic, built-ins only (JVM-side).
-# Scores each language by marker-token hits; argmax with deterministic
-# tie-break by language code; 'und' when nothing matches.
+# language-ID: marker-word n-gram heuristic. Scores each language by
+# marker-token hits; argmax with deterministic tie-break by language code;
+# 'und' when nothing matches.
 # ---------------------------------------------------------------------------
 
 # Top-20 languages by web-text volume, 8 highest-frequency function words
@@ -87,9 +93,9 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 
 # zh/ja do not space-delimit, so the whitespace-token matrix above never
 # fires on natural text in those scripts (VERDICT r3 item 8). For them a
-# CHARACTER-BIGRAM path counts substring occurrences of high-frequency
-# function bigrams — pure built-ins (length/replace), value-exact across
-# engines: occurrences(m) = (len(t) - len(replace(t, m, ''))) / len(m).
+# CHARACTER-BIGRAM path counts non-overlapping substring occurrences of
+# high-frequency function bigrams (str.count; the SQL form is
+# (len(t) - len(replace(t, m, ''))) / len(m)), value-exact across engines.
 # Both matrices are single-sourced here; oracles.py generates the DuckDB
 # SQL from them.
 LANG_CHAR_MARKERS: dict[str, tuple[str, ...]] = {
@@ -115,78 +121,100 @@ LANG_CHAR_MARKERS: dict[str, tuple[str, ...]] = {
 }
 
 
-def lang_char_score(text_col: Column, lang: str) -> Column:
-    score = F.lit(0)
-    for m in LANG_CHAR_MARKERS[lang]:
-        occ = (
-            F.length(text_col)
-            - F.length(F.replace(text_col, F.lit(m), F.lit("")))
-        ) / F.lit(len(m))
-        score = score + occ.cast("int")
-    return score
+# Quality stopwords: matched case-insensitively (lower(word)) over the same
+# whitespace tokens as the language markers.
+_QUALITY_STOPWORDS = ("the", "a", "and", "of", "to", "is", "in")
+
+# Spark's split(str, '\s+') uses a Java regex, where \s is ASCII-only; Python's
+# Unicode \s would also split on \x1c-\x1f, \x85, \xa0, U+2028 and friends.
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
+_LANGS = tuple(sorted(LANG_MARKERS))
 
 
-def lang_score(text_col: Column, lang: str) -> Column:
-    words = F.split(F.lower(text_col), r"\s+")
-    score = F.lit(0)
-    for marker in LANG_MARKERS[lang]:
-        score = score + F.size(F.filter(words, lambda w: w == F.lit(marker)))
-    if lang in LANG_CHAR_MARKERS:
-        score = score + lang_char_score(text_col, lang)
-    return score
+def page_text_features(text: str | None) -> tuple:
+    """(lang, n_words, n_stopwords, quality_bucket) of one text.
+
+    lang: per language, the count of whitespace tokens of lower(text) equal
+    to one of its markers, plus non-overlapping occurrences of its char
+    markers in text (zh/ja); argmax over languages in code order, strictly
+    greatest wins; 'und' when no language scores above 0. Tokens are
+    Spark split semantics: leading/trailing empty tokens are kept, so ""
+    is one word. quality_bucket: 2 = >= 20 words with >= 5% stopwords,
+    1 = >= 5 words, 0 otherwise (integer cross-multiplication). Null text
+    gives ('und', None, None, 0), as the Column expressions did under ANSI
+    size(NULL) = NULL."""
+    if text is None:
+        return "und", None, None, 0
+    words = _JAVA_WS.split(text.lower())
+    counts = Counter(words)
+    non_ascii = not text.isascii()  # every char marker is non-ASCII
+    best, best_score = "und", 0
+    for lang in _LANGS:
+        score = sum(counts[m] for m in LANG_MARKERS[lang])
+        if non_ascii and lang in LANG_CHAR_MARKERS:
+            score += sum(text.count(m) for m in LANG_CHAR_MARKERS[lang])
+        if score > best_score:
+            best, best_score = lang, score
+    n_words = len(words)
+    n_stop = sum(counts[w] for w in _QUALITY_STOPWORDS)
+    if n_words >= 20 and n_stop * 100 >= n_words * 5:
+        bucket = 2
+    elif n_words >= 5:
+        bucket = 1
+    else:
+        bucket = 0
+    return best, n_words, n_stop, bucket
+
+
+_FEATURE_SCHEMA = T.StructType(
+    [
+        T.StructField("lang", T.StringType()),
+        T.StructField("n_words", T.IntegerType()),
+        T.StructField("n_stopwords", T.IntegerType()),
+        T.StructField("quality_bucket", T.IntegerType()),
+    ]
+)
+_FEATURE_COLS = _FEATURE_SCHEMA.fieldNames()
+_INT_FEATURES = dict.fromkeys(_FEATURE_COLS[1:], "Int32")  # nullable ints
+
+
+@F.pandas_udf(_FEATURE_SCHEMA)
+def text_features_udf(text: pd.Series) -> pd.DataFrame:
+    """Every word-level page feature in one Arrow pass: each text is split
+    and its words counted once, for all features at once."""
+    rows = [page_text_features(t) for t in text]
+    return pd.DataFrame(rows, columns=_FEATURE_COLS).astype(_INT_FEATURES)
 
 
 def lang_id(text_col: Column) -> Column:
-    """argmax over marker scores; ties broken by language-code order;
-    all-zero → 'und'."""
-    pairs = [
-        F.struct(
-            lang_score(text_col, lang).alias("score"), F.lit(lang).alias("lang")
-        )
-        for lang in sorted(LANG_MARKERS)
-    ]
-    best = F.aggregate(
-        F.array(*pairs),
-        F.struct(F.lit(-1).alias("score"), F.lit("und").alias("lang")),
-        lambda acc, x: F.when(x["score"] > acc["score"], x).otherwise(acc),
-    )
-    return F.when(best["score"] > 0, best["lang"]).otherwise(F.lit("und"))
+    """Marker-word language id ('und' when nothing matches); see
+    ``page_text_features``."""
+    return text_features_udf(text_col)["lang"]
 
 
 # ---------------------------------------------------------------------------
-# quality scoring: integer features + bucketed score (built-ins only).
-# Ratios are compared by cross-multiplication so everything stays integer
-# (bit-exact across engines).
+# quality scoring: integer features + bucketed score. Ratios are compared by
+# cross-multiplication so everything stays integer (bit-exact across
+# engines). Word counts come from the same Arrow pass as lang_id, so a select
+# of both ships the text to Python once; the character counts stay JVM-side.
 # ---------------------------------------------------------------------------
 
 
 def quality_bucket(text_col: Column) -> Column:
-    """2 = wordy + stopword-bearing, 1 = some words, 0 = junk (integer
-    cross-multiplication, bit-exact across engines)."""
-    words = F.split(text_col, r"\s+")
-    stop = F.array(*[F.lit(w) for w in ("the", "a", "and", "of", "to", "is", "in")])
-    n_words = F.size(words)
-    n_stop = F.size(F.filter(words, lambda w: F.array_contains(stop, F.lower(w))))
-    return (
-        F.when((n_words >= 20) & (n_stop * 100 >= n_words * 5), F.lit(2))
-        .when(n_words >= 5, F.lit(1))
-        .otherwise(F.lit(0))
-    )
+    """2 = wordy + stopword-bearing, 1 = some words, 0 = junk."""
+    return text_features_udf(text_col)["quality_bucket"]
 
 
 def quality_features(text_col: Column) -> list[Column]:
-    words = F.split(text_col, r"\s+")
-    stop = F.array(*[F.lit(w) for w in ("the", "a", "and", "of", "to", "is", "in")])
-    n_words = F.size(words)
-    n_stop = F.size(F.filter(words, lambda w: F.array_contains(stop, F.lower(w))))
+    feats = text_features_udf(text_col)
     n_chars = F.length(text_col)
     n_alpha = F.length(F.regexp_replace(text_col, r"[^A-Za-z]", ""))
     return [
         n_chars.alias("n_chars"),
-        n_words.alias("n_words"),
-        n_stop.alias("n_stopwords"),
+        feats["n_words"].alias("n_words"),
+        feats["n_stopwords"].alias("n_stopwords"),
         n_alpha.alias("n_alpha"),
-        quality_bucket(text_col).alias("quality_bucket"),
+        feats["quality_bucket"].alias("quality_bucket"),
     ]
 
 

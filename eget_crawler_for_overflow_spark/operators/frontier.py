@@ -853,8 +853,7 @@ def _run_crawl(
     # metrics pay the same two aggs on first action.
     metrics_schema = "crawl_id string, generation int, name string, value double"
     metrics = spark.createDataFrame(
-        sorted(metrics_rows, key=lambda m: (m[1], m[2]))
-        or [(crawl_id, -1, "admitted", 0.0)],
+        _metrics_rows(crawl_id, metrics_rows, admitted_gens, extracted),
         metrics_schema,
     )
     if admitted_gens:
@@ -904,6 +903,23 @@ def _run_crawl(
         generations=n_generations,
         stats={"admitted": admitted_count, "next_seq": next_seq},
     )
+
+
+def _metrics_rows(
+    crawl_id: str,
+    metrics_rows: list[tuple],
+    admitted_gens: list[DataFrame],
+    extracted: DataFrame | None,
+) -> list[tuple]:
+    """The driver-side metrics rows in (generation, name) order. A crawl
+    with no metrics at all gets the one sentinel row (crawl_id, -1,
+    'admitted', 0.0); the sentinel never sits next to real rows, including
+    the admitted_hosts/status/completed rows aggregated from
+    ``admitted_gens`` and ``extracted``."""
+    rows = sorted(metrics_rows, key=lambda m: (m[1], m[2]))
+    if not rows and not admitted_gens and extracted is None:
+        rows = [(crawl_id, -1, "admitted", 0.0)]
+    return rows
 
 
 def _union_all(dfs: list[DataFrame]) -> DataFrame:

@@ -774,3 +774,18 @@ def test_fetch_extract_single_pin_identical(spark, pages, monkeypatch):
     monkeypatch.delenv("EGET_HITS_PIN")
     assert got["0"] == got["1"]
     assert any(s == "missing" for (_, _, _, _, s, *_rest) in got["0"])
+
+
+def test_metrics_sentinel_only_when_crawl_has_no_metrics():
+    """The (crawl_id, -1, 'admitted', 0.0) sentinel stands in for an empty
+    metrics frame only: never next to driver-side rows, nor next to the
+    rows aggregated later from admitted or extracted pages."""
+    from eget_crawler_for_overflow_spark.operators.frontier import _metrics_rows
+
+    sentinel = [("c", -1, "admitted", 0.0)]
+    assert _metrics_rows("c", [], [], None) == sentinel
+    some_frame = object()  # only its presence matters to the gate
+    assert _metrics_rows("c", [], [some_frame], None) == []
+    assert _metrics_rows("c", [], [], some_frame) == []
+    rows = [("c", 1, "queued", 3.0), ("c", 0, "queued", 1.0), ("c", 0, "admitted", 1.0)]
+    assert _metrics_rows("c", rows, [], None) == sorted(rows, key=lambda m: (m[1], m[2]))

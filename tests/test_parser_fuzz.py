@@ -63,3 +63,23 @@ def test_chunker_invariants_on_random_markdown(md):
         assert c["type"] in ("text", "header", "code", "list", "table")
         # chunking is deterministic
     assert chunks == chunk_markdown(md)
+
+
+# U+0130 'İ' lowercases to two chars: rawtext close tags must still be found
+# at the right offset after any number of them.
+fold_piece = st.one_of(
+    st.sampled_from(["İ", "İİİİİİİİİİİİ", "İstanbul", "ΣΑΣ", "ß", "ﬁ", "x", "a b"]),
+    st.sampled_from(["<p>", "</p>", "<div>", "</div>", "<em>", "</em>"]),
+    st.tuples(
+        st.sampled_from(["script", "style", "textarea", "SCRIPT", "Style"]),
+        st.sampled_from(["", "x", "a b", "İ", "var İ=1;", "p{}"]),
+    ).map(lambda tb: f"<{tb[0]}>{tb[1]}</{tb[0]}>"),
+)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(fold_piece, min_size=0, max_size=30).map("".join))
+def test_fast_parser_rawtext_after_length_changing_case_fold(html):
+    fast = E._extract_from_root(parse_html_fast(html))
+    slow = E._extract_from_root(parse_html_stdlib(html))
+    assert fast == slow

@@ -289,3 +289,30 @@ def test_fetch_join_broadcast_branch_through_engine(spark, monkeypatch):
             assert not shuffles, shuffles
     finally:
         frontier.FETCH_PLAN_CAPTURE.clear()
+
+
+def test_text_features_ship_text_once(spark):
+    """lang_id and the quality features share one Arrow pass: the plan of
+    q_lang_id and of the page-pipeline select of lang_id + quality_bucket
+    has exactly one ArrowEvalPython node (the text crosses to Python once)
+    and no interpreted filter/aggregate lambda over the words."""
+    from eget_crawler_for_overflow_spark.functions.text import (
+        lang_id,
+        quality_bucket,
+    )
+    from eget_crawler_for_overflow_spark.queries import q_lang_id
+
+    md = load_pages(spark, SF).select(F.col("text").alias("markdown"))
+    pipeline = (
+        md.select(
+            lang_id(F.col("markdown")).alias("lang"),
+            quality_bucket(F.col("markdown")).alias("q"),
+        )
+        .groupBy("lang", "q")
+        .count()
+    )
+    for df in (q_lang_id(spark, SF), pipeline):
+        txt = plan_text(df, "simple")
+        assert txt.count("ArrowEvalPython") == 1, txt
+        assert "filter(" not in txt and "aggregate(" not in txt, txt
+        assert "lambdafunction" not in txt, txt

@@ -1,5 +1,9 @@
 """URL normalization corner cases, pattern-filter Python-re semantics,
-chunker branch coverage, md_clean bug-for-bug behavior."""
+chunker branch coverage, md_clean bug-for-bug behavior, and the
+text-features kernel against its Column-expression oracle."""
+
+from hypothesis import Phase, given, settings
+from hypothesis import strategies as st
 
 from eget_crawler_for_overflow_spark.functions.text import clean_markdown
 from eget_crawler_for_overflow_spark.functions.urls import (
@@ -229,3 +233,181 @@ def test_lang_id_short_text_and_mixed_script(spark):
     con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
     want = dict(con.execute(ORACLES["lang_id"]).fetchall())
     assert got == want
+
+
+# ---------------------------------------------------------------------------
+# text_features_udf against the Column-expression forms it replaced: the
+# Catalyst-lambda lang_id / quality scoring, kept here as the differential
+# oracle (Spark's own split/lower/replace semantics, row by row).
+# ---------------------------------------------------------------------------
+
+
+def _oracle_lang_id(text_col):
+    from pyspark.sql import functions as F
+
+    from eget_crawler_for_overflow_spark.functions.text import (
+        LANG_CHAR_MARKERS,
+        LANG_MARKERS,
+    )
+
+    def score(lang):
+        words = F.split(F.lower(text_col), r"\s+")
+        s = F.lit(0)
+        for marker in LANG_MARKERS[lang]:
+            s = s + F.size(F.filter(words, lambda w: w == F.lit(marker)))
+        for m in LANG_CHAR_MARKERS.get(lang, ()):
+            occ = (
+                F.length(text_col)
+                - F.length(F.replace(text_col, F.lit(m), F.lit("")))
+            ) / F.lit(len(m))
+            s = s + occ.cast("int")
+        return s
+
+    pairs = [
+        F.struct(score(lang).alias("score"), F.lit(lang).alias("lang"))
+        for lang in sorted(LANG_MARKERS)
+    ]
+    best = F.aggregate(
+        F.array(*pairs),
+        F.struct(F.lit(-1).alias("score"), F.lit("und").alias("lang")),
+        lambda acc, x: F.when(x["score"] > acc["score"], x).otherwise(acc),
+    )
+    return F.when(best["score"] > 0, best["lang"]).otherwise(F.lit("und"))
+
+
+def _oracle_quality(text_col):
+    """(n_words, n_stopwords, quality_bucket) as Column expressions."""
+    from pyspark.sql import functions as F
+
+    words = F.split(text_col, r"\s+")
+    stop = F.array(*[F.lit(w) for w in ("the", "a", "and", "of", "to", "is", "in")])
+    n_words = F.size(words)
+    n_stop = F.size(F.filter(words, lambda w: F.array_contains(stop, F.lower(w))))
+    bucket = (
+        F.when((n_words >= 20) & (n_stop * 100 >= n_words * 5), F.lit(2))
+        .when(n_words >= 5, F.lit(1))
+        .otherwise(F.lit(0))
+    )
+    return n_words, n_stop, bucket
+
+
+_FEATURES = ("lang", "n_words", "n_stopwords", "quality_bucket")
+
+
+def _kernel_vs_oracle(spark, texts):
+    """Rows (i, text, kernel features, oracle features) that disagree."""
+    from pyspark.sql import functions as F
+
+    from eget_crawler_for_overflow_spark.functions.text import (
+        lang_id,
+        quality_features,
+    )
+
+    df = spark.createDataFrame(list(enumerate(texts)), "i long, text string")
+    t = F.col("text")
+    oracle = [_oracle_lang_id(t), *_oracle_quality(t)]
+    rows = df.select(
+        "i",
+        "text",
+        lang_id(t).alias("lang"),
+        *quality_features(t),
+        *[c.alias("o_" + name) for c, name in zip(oracle, _FEATURES)],
+    ).collect()
+    assert len(rows) == len(texts)
+    out = []
+    for r in rows:
+        got = tuple(r[c] for c in _FEATURES)
+        want = tuple(r["o_" + c] for c in _FEATURES)
+        if got != want:
+            out.append((r["i"], r["text"], got, want))
+    return out
+
+
+HOSTILE_TEXTS = [
+    None,
+    "",
+    "   ",
+    "\x0b\f",
+    "  the cat and the dog  ",
+    "\tthe\nof\rto\x0bis\fin ",
+    # whitespace to Python's \s but not to Java's: no split, one word
+    "the\x1cand\x1dof\x1eto\x1fis",
+    "the\x85and\xa0of\u2028to\u2029in \u3000 the",
+    # case folds: U+0130 lowers to two chars, final sigma, sharp s, ligatures
+    "İn İS THE İ the",
+    "ΣΑΣ ΟΔΟΣ the Σ",
+    "ẞ ß STRASSE der DIE",
+    "ﬁ ﬂ ﬀ the of and",
+    "\u212a the \u0131s is",
+    # all-caps markers
+    "THE AND OF TO IS IN THAT IT",
+    "DER DIE UND DAS IST NICHT MIT EIN",
+    "И В НЕ НА ЧТО С КАК ЭТО",
+    # repeated zh/ja char markers: non-overlapping counts
+    "のの",
+    "ですです",
+    "ですですです のののの",
+    "的的的 我们们 我们我们",
+    "日本語のページ 今天的天气",
+    "the 的 の and です 是",
+    # ties between languages: code order decides
+    "de la",
+    "og det",
+    "в не",
+    "la",
+    "det",
+    # quality bucket boundaries
+    " ".join(["w"] * 4),
+    " ".join(["w"] * 5),
+    " ".join(["w"] * 19 + ["the"]),
+    " ".join(["w"] * 20),
+    " ".join(["w"] * 39 + ["The"]),
+    " ".join(["w"] * 40 + ["the"]),
+]
+
+
+def test_text_features_kernel_matches_column_form_on_hostile_input(spark):
+    assert _kernel_vs_oracle(spark, HOSTILE_TEXTS) == []
+
+
+def test_text_features_null_and_empty():
+    """Null text keeps what the Column form gives under ANSI (size(NULL)
+    is NULL): lang 'und', bucket 0, null word counts."""
+    from eget_crawler_for_overflow_spark.functions.text import page_text_features
+
+    assert page_text_features(None) == ("und", None, None, 0)
+    assert page_text_features("") == ("und", 1, 0, 0)
+    assert page_text_features(" the ") == ("en", 3, 1, 0)
+
+
+_MIXED_PIECES = [
+    "the", "THE", "and", "de", "la", "og", "det", "и", "В", "的", "の", "です",
+    "我们", "İ", "Σ", "ß", "ﬁ", "x", "abc", "日本", "ある", "ない",
+]
+_SEPS = [" ", "  ", "\t", "\n", "\x0b", "\f", "\r", "\xa0", "\x85",
+         "\x1c", "\u2028", "\u3000", ""]
+
+
+# no shrink phase: every example is a Spark query, and the assertion already
+# names the disagreeing rows
+@settings(
+    max_examples=8,
+    deadline=None,
+    phases=(Phase.explicit, Phase.reuse, Phase.generate),
+)
+@given(
+    st.lists(
+        st.one_of(
+            st.none(),
+            st.lists(
+                st.one_of(st.sampled_from(_MIXED_PIECES), st.sampled_from(_SEPS)),
+                max_size=60,
+            ).map("".join),
+            st.text(max_size=30),
+        ),
+        min_size=1,
+        max_size=40,
+    )
+)
+def test_text_features_kernel_matches_column_form_mixed_script(spark, texts):
+    assert _kernel_vs_oracle(spark, texts) == []
