@@ -385,12 +385,18 @@ def _run_crawl(
                 # seeds bypass robots: the reference seeds via add_url
                 # directly (crawler_service.py:117); robots gate only
                 # extracted links (link_extractor.py:119-120)
-                c = c.join(robots_b, on="host", how="left")
-                c = c.filter(
-                    (F.col("depth") == 0)
-                    | robots_allowed_udf(F.col("url"), F.col("rules_text"))
-                )
-                c = c.drop("rules_text")
+                if g == 0:
+                    # the wave is the seed list (a resume starts at g ≥ 1):
+                    # skip the join and the UDF whose verdict every seed
+                    # ignores, keeping the join's column order
+                    c = c.select("host", *[x for x in c.columns if x != "host"])
+                else:
+                    c = c.join(robots_b, on="host", how="left")
+                    c = c.filter(
+                        (F.col("depth") == 0)
+                        | robots_allowed_udf(F.col("url"), F.col("rules_text"))
+                    )
+                    c = c.drop("rules_text")
             # first-wins inside the wave (queue_manager.py:47 under lock):
             # min-struct aggregation, NOT a row_number window — a hash agg
             # gets map-side partial aggregation, so the many duplicate
@@ -661,10 +667,7 @@ def _run_crawl(
             # count before pinning: same scan parallelism, 4× fewer
             # extract tasks. Harmless for big waves (rows/partition stays
             # bounded by wave/cores).
-            if os.environ.get("EGET_HITS_COALESCE", "1") != "0":
-                hits = hits.coalesce(
-                    max(2, spark.sparkContext.defaultParallelism)
-                )
+            hits = hits.coalesce(max(2, spark.sparkContext.defaultParallelism))
             if os.environ.get("EGET_CAPTURE_FETCH_PLAN") == "1":
                 from ..plans.explain import plan_text
 
@@ -763,10 +766,7 @@ def _run_crawl(
         # materialization write+read per generation — measured 5-8% off the
         # sf0.1 crawl headline, byte-identical output (interleaved A/B,
         # 3 pairs). filter_unseen's determinism contract is satisfied by
-        # the pinned parent. Set EGET_CAND_CHECKPOINT=1 to restore the old
-        # behavior when diagnosing lineage issues.
-        if os.environ.get("EGET_CAND_CHECKPOINT", "0") == "1":
-            cand = cand.localCheckpoint(eager=True)
+        # the pinned parent.
         n_cand = cand.count()
         t0 = _t("expand-links", t0)
 

@@ -18,7 +18,6 @@ equal keys across partitions).
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 
 import pandas as pd
@@ -98,9 +97,7 @@ def assign_seq_counted(
     # forced-range-path sf0.1 crawl (A/B in BASELINE.md round-6, identical
     # output), and strictly safer at design scale where the upstream is a
     # 10^10-row anti-join a sampling pass must never re-run.
-    # EGET_SEQ_INPUT_PIN=0 restores the old shape for diagnosis.
-    if os.environ.get("EGET_SEQ_INPUT_PIN", "1") != "0":
-        df = df.localCheckpoint(eager=True)
+    df = df.localCheckpoint(eager=True)
     ranged = (
         df.repartitionByRange(num_partitions, *[F.col(c) for c in order_cols])
         .sortWithinPartitions(*order_cols)

@@ -20,11 +20,21 @@ first-wins admission (queue_manager.py:27,47,52). At 10^10 URLs that set is
   comes from the anti-join (SURVEY.md §4.3.2).
 
 Bloom maintenance is fully distributive: a ``mapInPandas`` pass over the
-delta emits one (shard, bitmap, n) row per shard per partition (the delta
-is pre-partitioned by shard id, so ~n_shards bitmaps of ~100 KB total —
+delta emits one (shard, bitmap, n) row per touched shard (the delta is
+hash-partitioned by shard id, so each shard lands in exactly one task —
 never URL rows), the driver OR-merges them and re-broadcasts the merged
 bitmaps (torrent distribution, one copy per executor). The driver therefore
 handles O(n_shards × bitmap_bytes) per generation regardless of wave size.
+
+Task count: every repartition keyed by shard (bucketed append, bloom-delta
+build, files-mode membership routing, compaction rewrite) runs in ``k``
+tasks, the largest divisor of ``n_shards`` that is ≤ the session's default
+parallelism (``_shard_tasks``), not in ``n_shards`` tasks. Each task then
+owns ``n_shards / k`` whole buckets/shards, so the file layout and the bits
+are the same as with one task per shard. On a few cores the task count
+matters more than the data: a Python task has a fixed start-up cost of
+~0.3 s, and 32 of them per append queued the crawl's main thread behind
+the maintenance thread.
 
 Two bloom storage mechanisms (``bloom_storage=``), same bits either way:
 
@@ -123,6 +133,27 @@ class BloomShard:
 _DELTA_SCHEMA = "shard int, bitmap binary, n long"
 
 
+def _shard_tasks(n_shards: int, parallelism: int) -> int:
+    """Tasks for a shuffle keyed by shard: the largest divisor of
+    ``n_shards`` that is ≤ ``parallelism`` (1 at the least). A divisor,
+    because the bucketed writer places a row in bucket
+    ``pmod(murmur3(url_hash), n_shards)`` and ``repartition(k, url_hash)``
+    in task ``pmod(murmur3(url_hash), k)``: with ``k | n_shards`` bucket
+    ``b`` always lands in task ``b mod k``, so each bucket is written by
+    one task, as one file."""
+    top = max(1, min(n_shards, parallelism))
+    return max(d for d in range(1, top + 1) if n_shards % d == 0)
+
+
+def _hash_and_shard(col: pd.Series, n_shards: int) -> tuple[np.ndarray, np.ndarray]:
+    """(uint64 hashes, shard ids) of a url_hash column. The shard is
+    ``pmod(url_hash, n_shards)`` of the SIGNED hash, the key the shard-keyed
+    repartitions route by, so all of a shard's rows meet in one task for any
+    ``n_shards`` (an unsigned modulo agrees with it only for powers of two)."""
+    signed = col.to_numpy(dtype=np.int64)
+    return signed.view(np.uint64), np.mod(signed, n_shards)
+
+
 def _bloom_fs(bloom_dir: str):
     """(pyarrow FileSystem, base path) for the bloom dir — handles DFS
     URIs (s3://, hdfs://, ...) as well as local paths, so file-mode bloom
@@ -197,6 +228,9 @@ class SeenSet:
             raise ValueError(f"unknown bloom_storage: {bloom_storage!r}")
         self.spark = spark
         self.n_shards = n_shards
+        # tasks per shard-keyed shuffle; n_shards stays the bucket and
+        # bloom-shard count
+        self.n_tasks = _shard_tasks(n_shards, spark.sparkContext.defaultParallelism)
         self.use_bloom = use_bloom
         self.bloom_storage = bloom_storage
         self.m = _bloom_m(expected_per_shard)
@@ -302,10 +336,11 @@ class SeenSet:
         bucketed append + one O(delta) distributive bitmap build. No row
         ever reaches the driver."""
         delta = admitted.select("url_hash", "url", "host")
-        # repartition(n, url_hash) uses the same murmur3-pmod placement as
-        # bucketBy, so every task writes exactly one bucket file per append
+        # repartition(k, url_hash) uses the same murmur3-pmod placement as
+        # bucketBy and k divides n_shards, so each bucket sits in exactly one
+        # task and an append writes one file per non-empty bucket
         writer = (
-            delta.repartition(self.n_shards, F.col("url_hash"))
+            delta.repartition(self.n_tasks, F.col("url_hash"))
             .write.bucketBy(self.n_shards, "url_hash")
             .sortBy("url_hash")
         )
@@ -324,8 +359,7 @@ class SeenSet:
                 for pdf in batches:
                     if len(pdf) == 0:
                         continue
-                    h = pdf["url_hash"].to_numpy(dtype=np.int64).view(np.uint64)
-                    shard = (h % np.uint64(n_shards)).astype(np.int64)
+                    h, shard = _hash_and_shard(pdf["url_hash"], n_shards)
                     for s in np.unique(shard):
                         bm = acc.get(int(s))
                         if bm is None:
@@ -342,9 +376,11 @@ class SeenSet:
                         }
                     )
 
+            # keyed by shard id, so each shard sits in one task and build()
+            # emits one (shard, bitmap, n) row per touched shard
             deltas = (
                 delta.select("url_hash")
-                .repartition(self.n_shards, F.pmod(F.col("url_hash"), F.lit(self.n_shards)))
+                .repartition(self.n_tasks, F.pmod(F.col("url_hash"), F.lit(n_shards)))
                 .mapInPandas(build, _DELTA_SCHEMA)
             )
             if self.bloom_storage == "files":
@@ -365,9 +401,9 @@ class SeenSet:
                 self._bloom_written = True
                 # every admitted url appears in exactly one delta row's n
                 # (admission is first-wins + unseen), so count maintenance
-                # reads only the files THIS append just wrote (≤ n_shards
-                # tiny rows — ADVICE r3: not a rescan of every delta file
-                # written so far, whose cumulative cost is O(gens×shards))
+                # reads only the files THIS append just wrote (one tiny row
+                # per touched shard — ADVICE r3: not a rescan of every delta
+                # file written so far, whose cumulative cost is O(gens×shards))
                 import pyarrow.parquet as pq
 
                 seen_before = set(before)
@@ -380,7 +416,7 @@ class SeenSet:
                 self._bloom_files = after
             else:
                 rows = deltas.collect()
-                # ≈ n_shards rows × ~100 KB bitmaps — bounded, never URL rows
+                # ≤ n_shards rows × ~100 KB bitmaps — bounded, never URL rows
                 for r in rows:
                     self.bits[r["shard"]] |= np.frombuffer(r["bitmap"], dtype=np.uint8)
                     self.count += r["n"]
@@ -415,7 +451,7 @@ class SeenSet:
         (
             self.spark.read.parquet(loc)
             .select("url_hash", "url", "host")
-            .repartition(self.n_shards, F.col("url_hash"))
+            .repartition(self.n_tasks, F.col("url_hash"))
             .write.bucketBy(self.n_shards, "url_hash")
             .sortBy("url_hash")
             .mode("overwrite")
@@ -509,8 +545,7 @@ class SeenSet:
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                h = pdf[hash_col].to_numpy(dtype=np.int64).view(np.uint64)
-                shard = (h % np.uint64(n_shards)).astype(np.int64)
+                h, shard = _hash_and_shard(pdf[hash_col], n_shards)
                 res = np.zeros(len(pdf), dtype=bool)
                 for s in np.unique(shard):
                     msk = shard == s
@@ -531,8 +566,8 @@ class SeenSet:
 
     def _filter_unseen_files(self, cand: DataFrame, hash_col: str) -> DataFrame:
         """File-backed bloom membership (the 10^10-URL design point): the
-        wave is hash-partitioned into n_shards tasks keyed by shard id, so
-        each task loads and OR-merges ONLY its own shard's bitmap delta
+        wave is hash-partitioned by shard id into k tasks (``_shard_tasks``),
+        so each task loads and OR-merges ONLY its own shards' bitmap delta
         files (parquet under ``bloom_dir/shard=<s>/``) — one ~100 KB-scale
         read per shard per wave, independent of total filter size. The
         shuffle this adds is wave-sized (the broadcast variant has none);
@@ -601,8 +636,7 @@ class SeenSet:
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                h = pdf[hash_col].to_numpy(dtype=np.int64).view(np.uint64)
-                shard = (h % np.uint64(n_shards)).astype(np.int64)
+                h, shard = _hash_and_shard(pdf[hash_col], n_shards)
                 res = np.zeros(len(pdf), dtype=bool)
                 for s in np.unique(shard):
                     msk = shard == s
@@ -611,10 +645,10 @@ class SeenSet:
                 # payload columns — they can dominate memory bandwidth)
                 yield pdf.assign(__maybe_seen=res)
 
-        # route each row to its shard's task (same pmod placement the
-        # build pass used, so ~1 shard file-set load per task)
+        # route each row to its shard's task (same pmod key the build pass
+        # used, so each shard's file set is loaded by one task)
         cand2 = cand.repartition(
-            self.n_shards, F.pmod(F.col(hash_col), F.lit(self.n_shards))
+            self.n_tasks, F.pmod(F.col(hash_col), F.lit(n_shards))
         )
         marked = cand2.mapInPandas(mark, maybe_schema)
         fresh = marked.filter(~F.col("__maybe_seen")).drop("__maybe_seen")

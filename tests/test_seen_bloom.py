@@ -277,3 +277,115 @@ def test_long_crawl_compaction_24_generations(spark, pages):
     finally:
         fi.drop()
         bc.drop()
+
+
+# ---------------------------------------------------------------------------
+# shard-keyed shuffles run in k = _shard_tasks(n_shards, parallelism) tasks
+# ---------------------------------------------------------------------------
+
+from eget_crawler_for_overflow_spark.operators import seen as seen_mod  # noqa: E402
+
+
+def test_shard_tasks_is_largest_divisor_within_parallelism():
+    assert seen_mod._shard_tasks(32, 3) == 2
+    assert seen_mod._shard_tasks(32, 8) == 8
+    assert seen_mod._shard_tasks(32, 64) == 32
+    assert seen_mod._shard_tasks(8, 3) == 2
+    assert seen_mod._shard_tasks(7, 3) == 1  # prime: one task
+    assert seen_mod._shard_tasks(7, 8) == 7
+    assert seen_mod._shard_tasks(12, 5) == 4
+    assert seen_mod._shard_tasks(5, 0) == 1
+
+
+def _job_group_tasks(spark, group):
+    """Tasks that ran in the jobs of one job group (skipped stages run
+    none)."""
+    st = spark.sparkContext.statusTracker()
+    stages = set()
+    for j in st.getJobIdsForGroup(group):
+        info = st.getJobInfo(j)
+        if info is not None:
+            stages.update(info.stageIds)
+    tasks = 0
+    for s in stages:
+        si = st.getStageInfo(s)
+        if si is not None:
+            tasks += si.numCompletedTasks
+    return tasks
+
+
+@pytest.mark.parametrize("parallelism", [None, 3], ids=["session", "local3"])
+@pytest.mark.parametrize("n_shards", [32, 8, 7])
+def test_shard_fanout_layout_bits_and_task_count(
+    spark, n_shards, parallelism, monkeypatch
+):
+    """Both storage modes over two appends: the broadcast bitmaps equal a
+    numpy reference, each append writes one bucket file per non-empty
+    bucket and (files mode) one bloom file per touched shard, and one add
+    runs O(parallelism) tasks, not O(n_shards). ``local3`` sizes the
+    fan-out as a 3-core session would (k = 2, 2, 1)."""
+    import glob
+    import re
+
+    if parallelism is not None:
+        real = seen_mod._shard_tasks
+        monkeypatch.setattr(
+            seen_mod, "_shard_tasks", lambda n, _p: real(n, parallelism)
+        )
+    dp = spark.sparkContext.defaultParallelism
+    urls = [f"https://h{i % 13}.example/p/{i}" for i in range(600)]
+    rows = (
+        spark.createDataFrame([(u,) for u in urls], "url string")
+        .coalesce(1)
+        .withColumn("url_hash", F.xxhash64("url"))
+        .withColumn("host", F.lit("h"))
+        .withColumn("bucket", F.pmod(F.hash("url_hash"), F.lit(n_shards)))
+        .localCheckpoint(eager=True)
+    )
+    parts = [
+        rows.filter(F.col("url_hash") % 3 == 0),
+        rows.filter(F.col("url_hash") % 3 != 0),
+    ]
+    bc = SeenSet(spark, n_shards=n_shards, bloom_storage="broadcast")
+    fi = SeenSet(spark, n_shards=n_shards, bloom_storage="files")
+    try:
+        ref = np.zeros_like(bc.bits)
+        for gen, part in enumerate(parts):
+            local = part.select("url_hash", "bucket").collect()
+            hashes = np.array([r["url_hash"] for r in local], dtype=np.int64)
+            shards = np.mod(hashes, n_shards)
+            buckets = {r["bucket"] for r in local}
+            for s in np.unique(shards):
+                seen_mod._bloom_set(ref[s], hashes[shards == s].view(np.uint64), bc.m)
+            bloom_before = glob.glob(f"{fi.bloom_dir}/shard=*/*.parquet")
+            for s in (bc, fi):
+                tbl_before = _table_files(spark, s.table) if s._created else []
+                group = f"seen-fanout-{n_shards}-{parallelism}-{s.bloom_storage}-{gen}"
+                spark.sparkContext.setJobGroup(group, group)
+                try:
+                    s.add(part.drop("bucket"))
+                finally:
+                    spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+                assert _job_group_tasks(spark, group) <= 2 * dp + 4
+                new = set(_table_files(spark, s.table)) - set(tbl_before)
+                got_buckets = [int(re.search(r"_(\d{5})\.", f).group(1)) for f in new]
+                assert sorted(got_buckets) == sorted(buckets)  # one file each
+            new_bloom = set(glob.glob(f"{fi.bloom_dir}/shard=*/*.parquet")) - set(
+                bloom_before
+            )
+            got_shards = [int(re.search(r"/shard=(\d+)/", f).group(1)) for f in new_bloom]
+            assert sorted(got_shards) == sorted(int(x) for x in np.unique(shards))
+            assert (bc.bits == ref).all()
+            assert (fi.merged_file_bits() == ref).all()
+        assert bc.count == fi.count == len(urls)
+        probe = rows.drop("bucket").union(
+            rows.drop("bucket")
+            .withColumn("url", F.concat("url", F.lit("?new")))
+            .withColumn("url_hash", F.xxhash64("url"))
+        )
+        want = sorted(f"{u}?new" for u in urls)
+        assert sorted(r["url"] for r in bc.filter_unseen(probe).collect()) == want
+        assert sorted(r["url"] for r in fi.filter_unseen(probe).collect()) == want
+    finally:
+        bc.drop()
+        fi.drop()
