@@ -15,4 +15,8 @@ Nothing here is a port: every module is written Spark-first, with the
 reference cited (file:line) only to pin down *semantics*.
 """
 
+# imported for its side effect: Python workers that unpickle an engine UDF
+# stop re-reading every zip import's directory on each task (see the module)
+from . import worker_imports  # noqa: F401
+
 __version__ = "0.1.0"

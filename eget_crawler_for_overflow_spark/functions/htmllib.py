@@ -11,7 +11,6 @@ Python and only ever runs inside Arrow-batched pandas UDFs.
 
 from __future__ import annotations
 
-import os
 import re
 import string
 from html import unescape
@@ -212,8 +211,8 @@ class _TreeBuilder(HTMLParser):
 def parse_html_stdlib(html: str) -> Node:
     """Reference parser path: stdlib ``html.parser``. Kept as the
     validation oracle for the fast tokenizer (tests assert tree-equivalent
-    extraction on the whole corpus) and as an escape hatch
-    (EGET_SLOW_PARSER=1)."""
+    extraction on the whole corpus) and as ``parse_html``'s fallback when
+    the fast tokenizer raises."""
     builder = _TreeBuilder()
     try:
         builder.feed(html)
@@ -349,8 +348,6 @@ def parse_html(html: str) -> Node:
     """Parse an HTML string into a Node tree. Never raises: parse errors
     degrade to a partial tree (matching the reference's try/except-and-log
     posture, e.g. link_extractor.py:123-125)."""
-    if os.environ.get("EGET_SLOW_PARSER"):
-        return parse_html_stdlib(html)
     try:
         return parse_html_fast(html)
     except Exception:

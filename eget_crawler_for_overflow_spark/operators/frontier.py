@@ -655,7 +655,6 @@ def _run_crawl(
                 )
             )
 
-        ext = None
         if n_fetchable <= cfg.broadcast_fetch_threshold:
             hits = pages.select("url", "html").join(
                 F.broadcast(eligible), on="url", how="inner"
@@ -672,65 +671,46 @@ def _run_crawl(
                 from ..plans.explain import plan_text
 
                 FETCH_PLAN_CAPTURE.append(plan_text(hits))
-            if os.environ.get("EGET_HITS_PIN", "0") == "1":
-                # pre-r6 shape (diagnosis only): pin the raw hits (url,
-                # html) first, then extract+pin — TWO wave-sized
-                # materializations per generation, one of them the full
-                # HTML payload
-                hits = hits.localCheckpoint(eager=True)
-                t0 = _t("fetch-hits", t0)
-                missed = eligible.join(
-                    F.broadcast(hits.select("url")), on="url", how="left_anti"
-                ).withColumn("html", F.lit(None).cast("binary"))
-                ext = _extract_select(
-                    hits.unionByName(missed)
-                ).localCheckpoint(eager=True)
-                t0 = _t("extract", t0)
-            else:
-                # r6 shape: extract STRAIGHT off the broadcast join and pin
-                # only the extraction output — the wave's raw HTML is never
-                # materialized (it exists only inside the Arrow batches of
-                # this one pass), and pages is still scanned exactly once
-                # per generation. Fetch-misses are recovered from the
-                # PINNED extraction output (urls only) instead of a pinned
-                # hits frame, with the reference miss envelope (null
-                # bundle, empty links, status='missing') built as literals
-                # — identical output to the pre-r6 shape (engine A/B test).
-                ext_h = _extract_select(hits).localCheckpoint(eager=True)
-                t0 = _t("fetch-extract", t0)
-                missed = eligible.join(
-                    F.broadcast(ext_h.select("url")), on="url", how="left_anti"
-                )
-                _null_e = {
-                    "markdown": "string",
-                    "title": "string",
-                    "description": "string",
-                    "language": "string",
-                    "metadata": "map<string,string>",
-                    "open_graph": "map<string,string>",
-                    "twitter_card": "map<string,string>",
-                    "meta_data": "map<string,string>",
-                    "json_ld": "array<string>",
-                }
-                ext_m = missed.select(
-                    "url",
-                    "url_hash",
-                    "host",
-                    "depth",
-                    "parent_url",
-                    "enqueue_seq",
-                    "generation",
-                    F.lit(g).alias("fetch_generation"),
-                    F.lit("missing").alias("status"),
-                    *[
-                        F.lit(None).cast(t).alias(c)
-                        for c, t in _null_e.items()
-                    ],
-                    F.array().cast("array<string>").alias("links"),
-                )
-                # no pin: ext_m is a cheap broadcast anti-join over pinned
-                # parents; consumers re-run it narrowly
-                ext = ext_h.unionByName(ext_m)
+            # extract STRAIGHT off the broadcast join and pin only the
+            # extraction output (r6): the wave's raw HTML is never
+            # materialized (it exists only inside the Arrow batches of this
+            # one pass), and pages is still scanned exactly once per
+            # generation. Fetch-misses are recovered from the PINNED
+            # extraction output (urls only), with the reference miss
+            # envelope (null bundle, empty links, status='missing') built as
+            # literals.
+            ext_h = _extract_select(hits).localCheckpoint(eager=True)
+            t0 = _t("fetch-extract", t0)
+            missed = eligible.join(
+                F.broadcast(ext_h.select("url")), on="url", how="left_anti"
+            )
+            _null_e = {
+                "markdown": "string",
+                "title": "string",
+                "description": "string",
+                "language": "string",
+                "metadata": "map<string,string>",
+                "open_graph": "map<string,string>",
+                "twitter_card": "map<string,string>",
+                "meta_data": "map<string,string>",
+                "json_ld": "array<string>",
+            }
+            ext_m = missed.select(
+                "url",
+                "url_hash",
+                "host",
+                "depth",
+                "parent_url",
+                "enqueue_seq",
+                "generation",
+                F.lit(g).alias("fetch_generation"),
+                F.lit("missing").alias("status"),
+                *[F.lit(None).cast(t).alias(c) for c, t in _null_e.items()],
+                F.array().cast("array<string>").alias("links"),
+            )
+            # no pin: ext_m is a cheap broadcast anti-join over pinned
+            # parents; consumers re-run it narrowly
+            ext = ext_h.unionByName(ext_m)
         else:
             fetched = eligible.join(
                 pages.select("url", "html"), on="url", how="left"

@@ -55,36 +55,26 @@ def assign_seq_counted(
     JOB to pick bounds, and the per-partition count pass is a second. The
     fast path shuffles to one partition (upstream filters stay parallel),
     sorts locally inside the pinned pass, and assigns ``start + i``
-    directly — identical output (order keys are a unique key, so the
-    global sort order equals the per-partition order), two fewer jobs per
-    generation."""
+    directly on the JVM — identical output and schema (order keys are a
+    unique key, so the global sort order equals the per-partition order),
+    two fewer jobs and no Python stage per generation."""
     spark = df.sparkSession
     if single_partition:
+        # one partition (index 0), sorted locally: monotonically_increasing_id
+        # is then the row's position, a JVM projection with no Python stage.
+        # try_add keeps the column nullable, as the mapInPandas it replaced.
         one = df.repartition(1).sortWithinPartitions(*order_cols)
-        out_schema = T.StructType(
-            list(one.schema.fields) + [T.StructField(seq_col, T.LongType())]
-        )
-
-        def add_seq_single(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            pos = start
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                pdf[seq_col] = range(pos, pos + len(pdf))
-                pos += len(pdf)
-                yield pdf
-
         # pin AFTER the seq pass (r7): the fast path needs no count before
         # assigning (seq = start + position), so pinning the OUTPUT costs
         # the same one materialization job but saves every downstream
         # consumer (seen add, host-counts bump, fetch broadcast, final
-        # union) an Arrow round-trip re-run of the Python pass per action.
+        # union) a re-run of the shuffle and sort per action.
         # Determinism is unchanged: order_cols are a unique key, so the
         # single-partition sort is a deterministic total order regardless
         # of shuffle arrival order.
-        out = one.mapInPandas(add_seq_single, out_schema).localCheckpoint(
-            eager=True
-        )
+        out = one.withColumn(
+            seq_col, F.try_add(F.monotonically_increasing_id(), F.lit(start))
+        ).localCheckpoint(eager=True)
         n = out.count()  # O(ms): a count over one pinned partition
         return out, n
     if num_partitions is None:

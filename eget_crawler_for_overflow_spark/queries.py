@@ -478,17 +478,20 @@ def q_queue_stats(spark, sf_dir):
     queue_manager.get_stats(). Absorbs the former `frontier_status_counts`
     row (round 5, freeing a registry slot under the 50-query cap)."""
     res = _crawl(spark, sf_dir)
-    m = res.metrics
-
-    def gauge(name, alias):
-        return m.filter(F.col("name") == name).select(
-            "generation", F.col("value").cast("long").alias(alias)
-        )
-
+    # one conditional aggregation: a single read of the lazy metrics frame
+    # (a three-way self-join re-ran its admitted/extracted aggs per gauge)
+    gauges = {"queued": "queued", "completed": "completed", "admitted": "n_admitted"}
     return (
-        gauge("queued", "queued")
-        .join(gauge("completed", "completed"), on="generation")
-        .join(gauge("admitted", "n_admitted"), on="generation")
+        res.metrics.groupBy("generation")
+        .agg(
+            *[
+                F.max(F.when(F.col("name") == name, F.col("value")))
+                .cast("long")
+                .alias(alias)
+                for name, alias in gauges.items()
+            ]
+        )
+        .dropna(subset=list(gauges.values()))
     )
 
 

@@ -730,8 +730,9 @@ def test_seq_single_partition_fastpath_identical(spark, pages):
 
 
 def test_assign_seq_single_partition_matches_two_pass(spark):
-    """Unit-level A/B on the assigner itself, multiple Arrow batches in
-    one partition (batch-boundary pos accumulation)."""
+    """Unit-level A/B on the assigner itself: the fast path's JVM position
+    over one sorted partition against the two-pass path's Arrow batches
+    (batch-boundary pos accumulation), rows and schema."""
     from eget_crawler_for_overflow_spark.operators.ordering import (
         assign_seq_counted,
     )
@@ -741,39 +742,36 @@ def test_assign_seq_single_partition_matches_two_pass(spark):
     a, na = assign_seq_counted(df, ["k"], start=7, single_partition=False)
     b, nb = assign_seq_counted(df, ["k"], start=7, single_partition=True)
     assert na == nb == 25_000
+    assert a.schema == b.schema
     ra = sorted((r["k"], r["v"], r["enqueue_seq"]) for r in a.collect())
     rb = sorted((r["k"], r["v"], r["enqueue_seq"]) for r in b.collect())
     assert ra == rb
     assert b.rdd.getNumPartitions() == 1
 
 
-def test_fetch_extract_single_pin_identical(spark, pages, monkeypatch):
-    """r6 fetch shape: extracting straight off the broadcast join (pin only
-    the extraction output; misses recovered from it) must produce the SAME
-    extracted table — every column, incl. the miss envelope — as the pre-r6
-    two-pin shape (EGET_HITS_PIN=1)."""
-    seeds = seeds_host0()
-    got = {}
-    for pin in ("0", "1"):
-        monkeypatch.setenv("EGET_HITS_PIN", pin)
-        cfg = CrawlConfig(max_depth=4, max_pages=None, same_domain=False)
-        res = run_crawl(spark, pages, seeds, cfg)
-        got[pin] = sorted(
-            (
-                r["url"],
-                r["depth"],
-                r["enqueue_seq"],
-                r["fetch_generation"],
-                r["status"],
-                r["markdown"],
-                r["title"],
-                tuple(r["links"]),
-            )
-            for r in res.extracted.collect()
-        )
-    monkeypatch.delenv("EGET_HITS_PIN")
-    assert got["0"] == got["1"]
-    assert any(s == "missing" for (_, _, _, _, s, *_rest) in got["0"])
+def test_fetch_extract_single_pin_identical(spark, pages):
+    """Fetch shape: extract straight off the broadcast join, pin only the
+    extraction output and rebuild the misses from it. Every ``missing`` row
+    carries the reference miss envelope (null bundle, empty links) for a url
+    no page has; every ``extracted`` row's markdown is its page's text."""
+    cfg = CrawlConfig(max_depth=4, max_pages=None, same_domain=False)
+    res = run_crawl(spark, pages, seeds_host0(), cfg)
+    bundle = (
+        "markdown title description language metadata open_graph "
+        "twitter_card meta_data json_ld"
+    ).split()
+    texts = {r["url"]: r["text"] for r in pages.select("url", "text").collect()}
+    rows = res.extracted.collect()
+    missing = [r for r in rows if r["status"] == "missing"]
+    extracted = [r for r in rows if r["status"] == "extracted"]
+    assert missing and extracted
+    assert len(missing) + len(extracted) == len(rows)
+    for r in missing:
+        assert r["url"] not in texts, r["url"]
+        assert all(r[c] is None for c in bundle), r
+        assert r["links"] == [], r
+    for r in extracted:
+        assert r["markdown"] == texts[r["url"]], r["url"]
 
 
 def test_metrics_sentinel_only_when_crawl_has_no_metrics():
