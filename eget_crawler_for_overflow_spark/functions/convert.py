@@ -658,10 +658,9 @@ def _pdf_stream_text(
     name selects the active ToUnicode CMap for CID-coded strings."""
     out: list[tuple[float, str]] = []
     i, n = 0, len(stream)
-    pending: list[str] = []
+    pending: list[tuple[float, str]] = []  # (font size, text) per glyph run
     cur_size = 0.0
     cur_cmap: dict[int, str] | None = None
-    line_size = 0.0  # size at the line's FIRST glyph (Tf may change mid-gap)
     in_array = False  # inside a TJ [...] show-array
 
     def decode(raw: bytes) -> str:
@@ -675,14 +674,13 @@ def _pdf_stream_text(
         return _pdf_str_decode(raw)
 
     def append(text: str) -> None:
-        nonlocal line_size
-        if not pending:
-            line_size = cur_size
-        pending.append(text)
+        pending.append((cur_size, text))
 
     def flush_line():
         if pending:
-            out.append((line_size, "".join(pending)))
+            # the line's size is the size at its FIRST glyph (Tf may
+            # change mid-gap)
+            out.append((pending[0][0], "".join(t for _, t in pending)))
             pending.clear()
 
     while i < n:

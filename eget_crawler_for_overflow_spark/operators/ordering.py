@@ -26,16 +26,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def assign_seq(
-    df: DataFrame,
-    order_cols: list[str],
-    start: int = 0,
-    seq_col: str = "enqueue_seq",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    return assign_seq_counted(df, order_cols, start, seq_col, num_partitions)[0]
-
-
 def assign_seq_counted(
     df: DataFrame,
     order_cols: list[str],
@@ -44,9 +34,10 @@ def assign_seq_counted(
     num_partitions: int | None = None,
     single_partition: bool = False,
 ) -> tuple[DataFrame, int]:
-    """``assign_seq`` + the total row count for free: the per-partition
-    count pass already sums to the wave size, so callers that need both
-    (the crawl loop's admitted-count metric) avoid a second job.
+    """``df`` with ``seq_col`` = ``start`` + its position in ``order_cols``
+    order, plus the total row count for free: the per-partition count
+    pass already sums to the wave size, so callers that need both (the
+    crawl loop's admitted-count metric) avoid a second job.
 
     ``single_partition=True`` is the small-wave fast path: when the caller
     KNOWS the frame fits comfortably in one partition (the crawl loop

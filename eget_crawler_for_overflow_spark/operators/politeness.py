@@ -23,10 +23,8 @@ the loop; AQE skew-join splitting stays as the second line of defense.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def salted_fetch_schedule(
@@ -55,46 +53,6 @@ def salted_fetch_schedule(
         time_col,
         ((rank - F.lit(1)) * F.lit(n_salts) + salt).cast("double")
         * F.coalesce(F.col(delay_col), F.lit(0.0)),
-    )
-
-
-def within_window(time_col: str, window_seconds: float) -> Column:
-    return F.col(time_col) < F.lit(float(window_seconds))
-
-
-def salted_fetch_schedule_grouped(
-    df: DataFrame,
-    order_cols: list[str],
-    host_col: str = "host",
-    delay_col: str = "crawl_delay",
-    url_col: str = "url",
-    n_salts: int = 8,
-    time_col: str = "fetch_time",
-) -> DataFrame:
-    """applyInPandas variant of ``salted_fetch_schedule`` — identical
-    output, demonstrating the grouped-map surface (SURVEY.md §2.10): each
-    ``(host, salt)`` group is one pandas frame, slot assignment is a local
-    sort + arange. The window version is preferred (whole-stage codegen,
-    no Python); this exists for schedulers whose per-host logic outgrows
-    window algebra (e.g. token buckets, adaptive backoff)."""
-    out_fields = df.schema.fields + [
-        T.StructField(time_col, T.DoubleType())
-    ]
-    out_schema = T.StructType(out_fields)
-    with_salt = df.withColumn(
-        "__salt", F.pmod(F.xxhash64(F.col(url_col)), F.lit(n_salts))
-    )
-
-    def schedule(pdf):
-        pdf = pdf.sort_values(order_cols, kind="mergesort").reset_index(drop=True)
-        salt = pdf["__salt"].iloc[0] if len(pdf) else 0
-        delay = pdf[delay_col].fillna(0.0) if delay_col in pdf else 0.0
-        rank = pd.RangeIndex(len(pdf))
-        pdf[time_col] = (rank * n_salts + salt).astype("float64") * delay
-        return pdf.drop(columns="__salt")
-
-    return with_salt.groupBy(host_col, "__salt").applyInPandas(
-        schedule, out_schema
     )
 
 

@@ -54,7 +54,6 @@ and crawl-output equality through the full engine.
 
 from __future__ import annotations
 
-import threading
 import uuid
 from collections.abc import Iterator
 
@@ -63,6 +62,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .background import BackgroundJob
 
 SEEN_SCHEMA = T.StructType(
     [
@@ -261,41 +262,19 @@ class SeenSet:
         self._appends = 0  # appends since the last compaction
         self._compactions = 0
         self._base_table = self.table
-        self._thread: threading.Thread | None = None
-        self._thread_err: BaseException | None = None
+        self._job = BackgroundJob(spark)
 
     # -- async update pipeline --------------------------------------------
     # The generation loop overlaps seen maintenance (bucketed append +
     # bitmap build: two O(delta) jobs) with the fetch/extract/expand phase
     # of the SAME generation — nothing in between reads the seen set.
-    # Spark job submission is thread-safe; barrier() re-raises any failure
-    # before the next membership check.
+    # barrier() re-raises any failure before the next membership check.
 
     def add_async(self, admitted: DataFrame) -> None:
-        self.barrier()
-
-        def run() -> None:
-            try:
-                self.add(admitted)
-            except BaseException as e:  # surfaced at barrier()
-                self._thread_err = e
-
-        try:
-            from pyspark.util import inheritable_thread_target
-
-            target = inheritable_thread_target(self.spark)(run)
-        except ImportError:
-            target = run
-        self._thread = threading.Thread(target=target, daemon=True)
-        self._thread.start()
+        self._job.start(self.add, admitted)
 
     def barrier(self) -> None:
-        if self._thread is not None:
-            self._thread.join()
-            self._thread = None
-        if self._thread_err is not None:
-            err, self._thread_err = self._thread_err, None
-            raise err
+        self._job.join()
 
     # -- storage ----------------------------------------------------------
     @property

@@ -29,7 +29,7 @@ from .functions.urls import canonicalize_udf, make_link_udf, make_pattern_filter
 from .operators import dedup, multimodal, similarity
 from .operators.chunker import chunks_table
 from .operators.frontier import CrawlConfig, run_crawl
-from .operators.ordering import assign_seq, top_k
+from .operators.ordering import assign_seq_counted, top_k
 from .operators.politeness import host_budget_rank
 
 SF001 = "/root/testdata/sf0.01"  # driver correctness tier
@@ -301,7 +301,7 @@ def q_page_budget(spark, sf_dir):
         "url", F.regexp_extract("url", r"/p/(\d+)$", 1).cast("long").alias("i")
     )
     lim = top_k(p, ["i"], 100)
-    return assign_seq(lim, ["i"], start=0).select("url", "enqueue_seq")
+    return assign_seq_counted(lim, ["i"], start=0)[0].select("url", "enqueue_seq")
 
 
 def q_host_budget_topk(spark, sf_dir):

@@ -1,12 +1,10 @@
-"""Cuckoo filter semantics, incremental-extract cache, priority frontier."""
+"""Incremental-extract cache and priority frontier."""
 
-import numpy as np
 from pyspark.sql import functions as F
 
 from eget_crawler_for_overflow_spark import pagemodel as pm
 from eget_crawler_for_overflow_spark.fixtures import load_pages
 from eget_crawler_for_overflow_spark.operators.cache import extract_incremental
-from eget_crawler_for_overflow_spark.operators.cuckoo import CuckooShard
 from eget_crawler_for_overflow_spark.operators.frontier import (
     CrawlConfig,
     run_crawl,
@@ -14,21 +12,6 @@ from eget_crawler_for_overflow_spark.operators.frontier import (
 
 SF = "/root/testdata/sf0.001"
 N_PAGES, N_HOSTS = 500, 8
-
-
-def test_cuckoo_no_false_negatives_and_delete():
-    c = CuckooShard(expected_n=5000)
-    rng = np.random.default_rng(3)
-    keys = rng.integers(0, 2**63, 5000, dtype=np.int64).view(np.uint64)
-    assert c.add(keys) == 5000
-    assert c.maybe_contains(keys).all()
-    probe = rng.integers(0, 2**63, 20000, dtype=np.int64).view(np.uint64)
-    fpp = c.maybe_contains(probe).mean()
-    assert fpp < 0.01  # 16-bit fingerprints → ~2^-13 per-bucket
-    # deletion: the capability Bloom lacks
-    assert c.delete(keys[:1000]) == 1000
-    assert not c.maybe_contains(keys[:1000]).all()
-    assert c.maybe_contains(keys[1000:]).all()
 
 
 def test_incremental_extract_skips_cached(spark, tmp_path):

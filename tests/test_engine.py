@@ -186,36 +186,6 @@ def test_extracted_markdown_byte_identical_to_pages(spark, pages):
     assert joined.count() > 10
 
 
-def test_grouped_scheduler_equals_window_scheduler(spark, pages):
-    from eget_crawler_for_overflow_spark.operators.politeness import (
-        salted_fetch_schedule,
-        salted_fetch_schedule_grouped,
-    )
-
-    cand = (
-        pages.limit(200)
-        .select(
-            "url",
-            F.parse_url(F.col("url"), F.lit("HOST")).alias("host"),
-            F.xxhash64("url").alias("seq"),
-        )
-        .withColumn("crawl_delay", F.lit(2.0))
-    )
-    a = {
-        (r["url"], r["fetch_time"])
-        for r in salted_fetch_schedule(
-            cand, order_cols=["seq", "url"], n_salts=4
-        ).collect()
-    }
-    b = {
-        (r["url"], r["fetch_time"])
-        for r in salted_fetch_schedule_grouped(
-            cand, order_cols=["seq", "url"], n_salts=4
-        ).collect()
-    }
-    assert a == b
-
-
 def test_combined_config_matches_reference(spark, pages):
     """Everything at once: robots + exclude pattern + budget + depth —
     the admitted sequence must still equal the reference loop's."""
@@ -595,7 +565,7 @@ def test_checkpointed_final_union_is_one_scan(spark, pages, tmp_path):
 def test_priority_counts_merge_failure_surfaces(spark, pages, monkeypatch):
     """The priority host-counts merge runs on a maintenance thread
     overlapped with fetch/extract (round 5); a failure there must
-    surface at the next hc_barrier(), never vanish with the daemon
+    surface at the next host_job.join(), never vanish with the daemon
     thread. Induce one deterministically: the counts frame is the only
     localCheckpoint target carrying the __host_seen column. (Patch the
     RUNTIME class — pyspark.sql.classic.dataframe.DataFrame — not the
@@ -621,6 +591,81 @@ def test_priority_counts_merge_failure_surfaces(spark, pages, monkeypatch):
         run_crawl(spark, pages, seeds_host0(), prio)
 
 
+def test_seen_append_failure_surfaces(spark, pages, monkeypatch):
+    """The seen set's append runs on a maintenance thread overlapped with
+    fetch/extract; a failure there must surface at the next generation's
+    barrier (filter_unseen), stopping the crawl, never vanish with the
+    daemon thread. Induced in the bucketed append's writer, which only
+    the seen set uses (``saveAsTable`` on an ``eget_seen_*`` table)."""
+    writer_cls = type(pages.write)
+    orig = writer_cls.saveAsTable
+    appends = []
+
+    def failing(self, name, *args, **kwargs):
+        if name.startswith("eget_seen_"):
+            appends.append(name)
+            raise RuntimeError("induced seen-append failure")
+        return orig(self, name, *args, **kwargs)
+
+    monkeypatch.setattr(writer_cls, "saveAsTable", failing)
+    cfg = CrawlConfig(max_depth=2, max_pages=None)
+    with pytest.raises(RuntimeError, match="induced seen-append"):
+        run_crawl(spark, pages, seeds_host0(), cfg)
+    # raised at generation 1's barrier: no later generation appended
+    assert len(appends) == 1
+
+
+def test_background_job_joins_previous_and_reraises_once(spark):
+    import time
+
+    from eget_crawler_for_overflow_spark.operators.background import (
+        BackgroundJob,
+    )
+
+    job = BackgroundJob(spark)
+    events = []
+
+    def slow():
+        time.sleep(0.2)
+        events.append("slow")
+
+    def fast():
+        events.append("fast")
+
+    def boom():
+        raise RuntimeError("induced job failure")
+
+    # start() waits for the running job before launching the next
+    job.start(slow)
+    job.start(fast)
+    job.join()
+    assert events == ["slow", "fast"]
+
+    # join() re-raises a failure once, then it is cleared
+    job.start(boom)
+    with pytest.raises(RuntimeError, match="induced job failure"):
+        job.join()
+    job.join()
+
+    # start() surfaces the previous job's failure instead of starting
+    job.start(boom)
+    with pytest.raises(RuntimeError, match="induced job failure"):
+        job.start(fast)
+    job.join()
+    assert events == ["slow", "fast"]
+
+    # the job thread inherits the caller's Spark local properties
+    sc = spark.sparkContext
+    sc.setLocalProperty("eget.test.prop", "inherited")
+    try:
+        seen_prop = []
+        job.start(lambda: seen_prop.append(sc.getLocalProperty("eget.test.prop")))
+        job.join()
+    finally:
+        sc.setLocalProperty("eget.test.prop", None)
+    assert seen_prop == ["inherited"]
+
+
 def test_many_generation_resume_rebuilds_state_in_one_scan(
     spark, pages, tmp_path, monkeypatch
 ):
@@ -630,9 +675,12 @@ def test_many_generation_resume_rebuilds_state_in_one_scan(
     — never a per-generation read + N-ary union (the shape the final
     assembly already eliminated). Same 70-leaf politeness-stretched star
     as test_checkpointed_final_union_is_one_scan, interrupted at
-    generation 40 and resumed; output must equal the uninterrupted run."""
-    from eget_crawler_for_overflow_spark.operators.frontier import (
-        RESUME_PLAN_CAPTURE,
+    generation 40 and resumed; output must equal the uninterrupted run.
+    The plans are taken from every frame ``CheckpointManager.read_all``
+    hands the resumed run."""
+    from eget_crawler_for_overflow_spark.plans.explain import plan_text
+    from eget_crawler_for_overflow_spark.sources.checkpoint import (
+        CheckpointManager,
     )
 
     n_leaves = 70
@@ -684,16 +732,25 @@ def test_many_generation_resume_rebuilds_state_in_one_scan(
             spark, star, [seed_url], cfg(40), robots=robots_df,
             checkpoint_dir=ck,
         )
-    RESUME_PLAN_CAPTURE.clear()
-    monkeypatch.setenv("EGET_CAPTURE_RESUME_PLAN", "1")
+    plans = []
+    read_all = CheckpointManager.read_all
+
+    def recording_read_all(self, spark_, name):
+        df = read_all(self, spark_, name)
+        if df is not None:
+            plans.append(plan_text(df, mode="simple"))
+        return df
+
+    monkeypatch.setattr(CheckpointManager, "read_all", recording_read_all)
     resumed = run_crawl(
         spark, star, [seed_url], cfg(256), robots=robots_df,
         checkpoint_dir=ck, resume=True,
     )
-    monkeypatch.delenv("EGET_CAPTURE_RESUME_PLAN")
 
-    assert len(RESUME_PLAN_CAPTURE) == 2  # admitted + extracted rebuilds
-    for txt in RESUME_PLAN_CAPTURE:
+    # admitted + extracted, once for the resume rebuild and once for the
+    # final assembly
+    assert len(plans) == 4
+    for txt in plans:
         assert txt.count("Scan parquet") == 1, txt
         assert "Union" not in txt, txt
 

@@ -198,12 +198,27 @@ def test_fetch_join_over_threshold_bucketed_pages_no_exchange(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
 
+def _record_fetch_join_plans(monkeypatch, frontier) -> list[str]:
+    """Wrap the engine's fetch join so every generation's join plan (the
+    frame the extraction reads) is recorded in the returned list."""
+    plans: list[str] = []
+    fetch_join = frontier._fetch_join
+
+    def recording(*args, **kwargs):
+        df = fetch_join(*args, **kwargs)
+        plans.append(plan_text(df))
+        return df
+
+    monkeypatch.setattr(frontier, "_fetch_join", recording)
+    return plans
+
+
 def test_fetch_join_over_threshold_through_engine(spark, tmp_path, monkeypatch):
     """VERDICT r4 item 2: the over-threshold fetch branch driven through
     run_crawl itself against a bucketed pages table, plan asserted from
-    the ENGINE's own fetch join (EGET_CAPTURE_FETCH_PLAN hook) — closing
-    the gap between 'the plan we want' (hand-built join above) and 'the
-    plan the engine emits'."""
+    the ENGINE's own fetch join (``frontier._fetch_join``, wrapped) —
+    closing the gap between 'the plan we want' (hand-built join above)
+    and 'the plan the engine emits'."""
     import re as _re
 
     from eget_crawler_for_overflow_spark import pagemodel as pm
@@ -224,8 +239,7 @@ def test_fetch_join_over_threshold_through_engine(spark, tmp_path, monkeypatch):
         .mode("overwrite")
         .saveAsTable(tbl)
     )
-    monkeypatch.setenv("EGET_CAPTURE_FETCH_PLAN", "1")
-    frontier.FETCH_PLAN_CAPTURE.clear()
+    plans = _record_fetch_join_plans(monkeypatch, frontier)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -236,7 +250,6 @@ def test_fetch_join_over_threshold_through_engine(spark, tmp_path, monkeypatch):
         res = run_crawl(spark, spark.table(tbl), seeds, cfg)
         assert res.admitted.count() > 0
         assert res.extracted.filter(F.col("status") == "extracted").count() > 0
-        plans = list(frontier.FETCH_PLAN_CAPTURE)
         assert len(plans) >= 3  # one per generation (depth 0..2)
         for txt in plans:
             # the engine's own join reads the bucketed table in place
@@ -247,7 +260,6 @@ def test_fetch_join_over_threshold_through_engine(spark, tmp_path, monkeypatch):
             assert len(shuffles) <= 1, txt
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        frontier.FETCH_PLAN_CAPTURE.clear()
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
 
@@ -267,28 +279,27 @@ def test_fetch_join_broadcast_branch_through_engine(spark, monkeypatch):
     )
 
     pages = load_pages(spark, SF)
-    monkeypatch.setenv("EGET_CAPTURE_FETCH_PLAN", "1")
-    frontier.FETCH_PLAN_CAPTURE.clear()
-    try:
-        seeds = [pm.url_of(i, 8) for i in (0, 2, 4)]
-        cfg = CrawlConfig(max_depth=2, max_pages=None)
-        res = run_crawl(spark, pages, seeds, cfg)
-        assert res.extracted.filter(F.col("status") == "extracted").count() > 0
-        plans = list(frontier.FETCH_PLAN_CAPTURE)
-        assert len(plans) >= 3  # one per generation
-        for txt in plans:
-            assert "BroadcastHashJoin" in txt, txt
-            shuffles = [
-                ln
-                for ln in txt.splitlines()
-                if _re.search(
-                    r"\bExchange hashpartitioning|\bExchange rangepartitioning",
-                    ln,
-                )
-            ]
-            assert not shuffles, shuffles
-    finally:
-        frontier.FETCH_PLAN_CAPTURE.clear()
+    plans = _record_fetch_join_plans(monkeypatch, frontier)
+    seeds = [pm.url_of(i, 8) for i in (0, 2, 4)]
+    cfg = CrawlConfig(max_depth=2, max_pages=None)
+    res = run_crawl(spark, pages, seeds, cfg)
+    assert res.extracted.filter(F.col("status") == "extracted").count() > 0
+    assert len(plans) >= 3  # one per generation
+    for txt in plans:
+        assert "BroadcastHashJoin" in txt, txt
+        assert "BuildRight" in txt, txt  # the wave (right side) is broadcast
+        # formatted plans name a shuffle as "(n) Exchange" with its
+        # partitioning on a separate Arguments line
+        assert not _re.findall(r"\(\d+\) Exchange\b", txt), txt
+        shuffles = [
+            ln
+            for ln in txt.splitlines()
+            if _re.search(
+                r"\bExchange hashpartitioning|\bExchange rangepartitioning",
+                ln,
+            )
+        ]
+        assert not shuffles, shuffles
 
 
 def test_text_features_ship_text_once(spark):
