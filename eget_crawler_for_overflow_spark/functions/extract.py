@@ -669,11 +669,13 @@ def scrape_envelope_udf(
     includeScreenshot (models/request.py:18-34) — the batch analog of one
     POST /scrape per row, where make_scrape_udf binds one option set for
     the whole job."""
+    # a nullable boolean arrives from Arrow as object dtype holding None;
+    # bool(None) is False, the request model's default for both flags
     rows = [
         _scrape_one(h, u, om, it, et, bool(ir), bool(sc))
         for h, u, om, it, et, ir, sc in zip(
             html, url, only_main, include_tags, exclude_tags,
-            include_raw.fillna(False), include_screenshot.fillna(False),
+            include_raw, include_screenshot,
         )
     ]
     return pd.DataFrame(

@@ -67,6 +67,7 @@ from pyspark.sql import types as T
 from ..functions.extract import _decode, extract_page
 from ..functions.text import clean_markdown
 from .chunker import chunk_markdown, sentence_chunks
+from .scrape import resolve_requests
 
 # option column name -> (spark type ddl, pydantic default literal,
 # chunk_request.py:7-13)
@@ -222,23 +223,7 @@ def chunk_batch(
     ChunkResponse row per request keyed by url (use
     ``chunk_response_rows`` for the exploded per-chunk shape).
     """
-    req = requests
-    for col, (ddl, default) in OPTION_COLUMNS.items():
-        if col not in req.columns:
-            req = req.withColumn(col, F.lit(default).cast(ddl))
-        else:
-            req = req.withColumn(col, F.col(col).cast(ddl))
-
-    psel = pages.select("url", "html")
-    if broadcast_requests:
-        hits = psel.join(F.broadcast(req), on="url", how="inner")
-        missed = req.join(
-            F.broadcast(hits.select("url")), on="url", how="left_anti"
-        ).withColumn("html", F.lit(None).cast("binary"))
-        joined = hits.select(*missed.columns).unionByName(missed)
-    else:
-        joined = req.join(psel, on="url", how="left")
-
+    joined = resolve_requests(requests, pages, OPTION_COLUMNS, broadcast_requests)
     e = joined.select(
         "url",
         chunk_response_udf(

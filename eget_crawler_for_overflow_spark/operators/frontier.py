@@ -78,12 +78,6 @@ class CrawlConfig:
     # join); the plain shuffle join is the fallback here.
     broadcast_fetch_threshold: int = 2_000_000
     crawl_delay_window: float | None = None  # logical seconds per generation
-    # Salt for the politeness schedule's (host, salt) slot partitioning:
-    # "xxhash64" (default, JVM-fast) or "md5" (first-byte of md5(url) —
-    # bit-identical in ANSI SQL, so a DuckDB oracle can replay the full
-    # deferral loop; see oracles.py _bfs_priority_politeness_sql). Both
-    # are deterministic per-url; only the salt-group assignment differs.
-    politeness_salt: str = "xxhash64"
     # Priority frontier (north-rule W2): admission order key becomes
     # (depth*w_depth + host_seen_count*w_host, parent_seq, link_pos).
     # Both 0.0 (default) == exact reference FIFO parity.
@@ -92,9 +86,6 @@ class CrawlConfig:
     n_salts: int = 8
     n_shards: int = 32
     use_bloom: bool = True
-    # "broadcast" (default, filters ≤ ~100 MB) or "files" (the 10^10-URL
-    # design point: per-shard bitmap files loaded task-side — seen.py)
-    bloom_storage: str = "broadcast"
     # Rewrite the seen table to 1 file/bucket every K generations
     # (Iceberg rewrite_data_files analog); None = never (sandbox scale).
     # Decision rule: the seen set accumulates n_shards files per
@@ -129,16 +120,6 @@ class CrawlConfig:
     seq_single_partition_max: int = 1_048_576
     max_generations: int = 64
 
-    def __post_init__(self) -> None:
-        # fail loud on typos: a silently-ignored salt mode would run a
-        # DIFFERENT deterministic deferral schedule than the caller's
-        # oracle/replay expects (same policy as SeenSet's bloom_storage)
-        if self.politeness_salt not in ("xxhash64", "md5"):
-            raise ValueError(
-                f"unknown politeness_salt: {self.politeness_salt!r} "
-                "(expected 'xxhash64' or 'md5')"
-            )
-
 
 @dataclass
 class CrawlResult:
@@ -168,7 +149,6 @@ def run_crawl(
         spark,
         n_shards=cfg.n_shards,
         use_bloom=cfg.use_bloom,
-        bloom_storage=cfg.bloom_storage,
         compact_every=cfg.seen_compact_every,
     )
     try:
@@ -582,17 +562,8 @@ def _schedule_politeness(
     # localCheckpoint was the largest remaining per-generation
     # materialization in the politeness regime
     fj = fj.drop("rules_text")
-    salt_expr = None
-    if cfg.politeness_salt == "md5":
-        salt_expr = F.pmod(
-            F.conv(F.substring(F.md5(F.col("url")), 1, 2), 16, 10).cast("long"),
-            F.lit(cfg.n_salts),
-        )
     fj = salted_fetch_schedule(
-        fj,
-        order_cols=["depth", "enqueue_seq"],
-        n_salts=cfg.n_salts,
-        salt_expr=salt_expr,
+        fj, order_cols=["depth", "enqueue_seq"], n_salts=cfg.n_salts
     )
     fj = fj.localCheckpoint(eager=True)
     eligible = fj.filter(F.col("fetch_time") < F.lit(cfg.crawl_delay_window)).drop(

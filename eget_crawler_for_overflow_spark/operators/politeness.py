@@ -9,9 +9,12 @@ deferred to later generations.
 
 Skew: one mega-host can own half the frontier (our corpus makes host0 own
 50% by construction). Hash-partitioning by ``host`` would put half the wave
-in one task. Instead each URL gets ``salt = pmod(xxhash64(url), n_salts)``
-and ranking runs per ``(host, salt)`` — n_salts-way parallel even for the
-mega-host. Slot times interleave the salt groups round-robin:
+in one task. Instead each URL gets a salt in ``[0, n_salts)`` and ranking
+runs per ``(host, salt)`` — n_salts-way parallel even for the mega-host.
+The fetch schedule's salt is the first byte of ``md5(url)`` mod
+``n_salts`` (so at most 256 salt groups), which ANSI SQL can compute too, so a DuckDB oracle replays
+the deferral loop exactly (oracles.py). Slot times interleave the salt
+groups round-robin:
 
     fetch_time = ((rank_within_salt - 1) * n_salts + salt) * crawl_delay
 
@@ -23,7 +26,7 @@ the loop; AQE skew-join splitting stays as the second line of defense.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -35,15 +38,10 @@ def salted_fetch_schedule(
     url_col: str = "url",
     n_salts: int = 8,
     time_col: str = "fetch_time",
-    salt_expr: Column | None = None,
 ) -> DataFrame:
-    """``salt_expr`` overrides the default xxhash64 salt (any deterministic
-    int in [0, n_salts) — e.g. an md5-derived salt that a SQL oracle can
-    mirror; xxhash64 is Spark-only)."""
-    salt = (
-        salt_expr
-        if salt_expr is not None
-        else F.pmod(F.xxhash64(F.col(url_col)), F.lit(n_salts))
+    salt = F.pmod(
+        F.conv(F.substring(F.md5(F.col(url_col)), 1, 2), 16, 10).cast("long"),
+        F.lit(n_salts),
     )
     w = Window.partitionBy(F.col(host_col), salt).orderBy(
         *[F.col(c) for c in order_cols]

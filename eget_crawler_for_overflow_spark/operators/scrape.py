@@ -55,6 +55,33 @@ OPTION_COLUMNS: dict[str, tuple[str, object]] = {
 }
 
 
+def resolve_requests(
+    requests: DataFrame,
+    pages: DataFrame,
+    options: dict[str, tuple[str, object]],
+    broadcast_requests: bool,
+) -> DataFrame:
+    """Each request row with its ``options`` columns cast (a missing column
+    gets its default) and the page's ``html``, null for a url absent from
+    ``pages``. Broadcast: hits ∪ null-html misses, so pages is only
+    scanned; otherwise a plain left join."""
+    req = requests
+    for col, (ddl, default) in options.items():
+        if col not in req.columns:
+            req = req.withColumn(col, F.lit(default).cast(ddl))
+        else:
+            req = req.withColumn(col, F.col(col).cast(ddl))
+
+    psel = pages.select("url", "html")
+    if not broadcast_requests:
+        return req.join(psel, on="url", how="left")
+    hits = psel.join(F.broadcast(req), on="url", how="inner")
+    missed = req.join(
+        F.broadcast(hits.select("url")), on="url", how="left_anti"
+    ).withColumn("html", F.lit(None).cast("binary"))
+    return hits.select(*missed.columns).unionByName(missed)
+
+
 def scrape_batch(
     requests: DataFrame,
     pages: DataFrame,
@@ -68,23 +95,7 @@ def scrape_batch(
     includeScreenshot=False, tags unset). Returns one flattened ScrapeData
     row per request (SCRAPE_DATA_SCHEMA) keyed by url.
     """
-    req = requests
-    for col, (ddl, default) in OPTION_COLUMNS.items():
-        if col not in req.columns:
-            req = req.withColumn(col, F.lit(default).cast(ddl))
-        else:
-            req = req.withColumn(col, F.col(col).cast(ddl))
-
-    psel = pages.select("url", "html")
-    if broadcast_requests:
-        hits = psel.join(F.broadcast(req), on="url", how="inner")
-        missed = req.join(
-            F.broadcast(hits.select("url")), on="url", how="left_anti"
-        ).withColumn("html", F.lit(None).cast("binary"))
-        joined = hits.select(*missed.columns).unionByName(missed)
-    else:
-        joined = req.join(psel, on="url", how="left")
-
+    joined = resolve_requests(requests, pages, OPTION_COLUMNS, broadcast_requests)
     e = joined.select(
         "url",
         scrape_envelope_udf(

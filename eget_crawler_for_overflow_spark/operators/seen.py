@@ -36,17 +36,24 @@ matters more than the data: a Python task has a fixed start-up cost of
 ~0.3 s, and 32 of them per append queued the crawl's main thread behind
 the maintenance thread.
 
-Two bloom storage mechanisms (``bloom_storage=``), same bits either way:
+The filters' size picks their storage (``SeenSet.bloom_storage``); the
+bits are the same either way:
 
-* ``broadcast`` (default): driver OR-merges the per-shard delta rows and
-  broadcasts the stacked bitmaps — zero extra shuffle on the membership
-  path; right up to ~100 MB of filters.
-* ``files``: the 10^10-URL design point (~15 GB of filters, BASELINE.md).
-  The same build pass writes the per-shard bitmap deltas as parquet
-  partitioned by shard id; membership hash-partitions the wave by shard
-  and each task loads only its own shard's files. The driver never holds
-  a bitmap. Costs one wave-sized shuffle per generation — forced at the
-  design point, where broadcast is physically impossible.
+* ``broadcast`` while the stacked filters (``n_shards × ⌈m/8⌉`` bytes) fit
+  ``_BROADCAST_BLOOM_BYTES`` (~100 MB, n_shards ≤ 984): the driver
+  OR-merges the per-shard delta rows and broadcasts the stacked bitmaps —
+  no extra shuffle on the membership path.
+* ``files`` above it, e.g. the 10^10-URL design point (~15 GB of filters,
+  BASELINE.md). The same build pass writes the per-shard bitmap deltas as
+  parquet partitioned by shard id, next to the seen table in the
+  warehouse; membership routes the wave by shard and each task loads only
+  its own shards' files. The driver never holds a bitmap. Costs one
+  wave-sized shuffle per generation — forced where broadcast is
+  physically impossible.
+
+Either way membership is one path (``filter_unseen``): a Bloom mark, a
+fresh/maybe split and one anti-join of the "maybe seen" rows; only where
+the mark's bitmaps come from (``_bloom_loader``) differs.
 
 ``test_seen_bloom.py`` proves bitmap equality between the two mechanisms
 and crawl-output equality through the full engine.
@@ -56,6 +63,7 @@ from __future__ import annotations
 
 import uuid
 from collections.abc import Iterator
+from urllib.parse import urlsplit
 
 import numpy as np
 import pandas as pd
@@ -75,6 +83,9 @@ SEEN_SCHEMA = T.StructType(
 
 _BLOOM_K = 7
 _BITS_PER_KEY = 13
+# largest stacked filter set (bytes) the driver merges and broadcasts;
+# beyond it each task loads its own shards' filter files
+_BROADCAST_BLOOM_BYTES = 100 << 20
 
 
 def _splitmix64(x: np.ndarray) -> np.ndarray:
@@ -114,23 +125,6 @@ def _bloom_test(bits: np.ndarray, hashes: np.ndarray, m: int) -> np.ndarray:
     return bit.all(axis=0)
 
 
-class BloomShard:
-    """Single-shard Bloom filter (unit-test surface; the engine operates on
-    the stacked per-shard bitmap array directly)."""
-
-    __slots__ = ("m", "bits")
-
-    def __init__(self, expected_n: int):
-        self.m = _bloom_m(expected_n)
-        self.bits = np.zeros((self.m + 7) // 8, dtype=np.uint8)
-
-    def add(self, hashes: np.ndarray) -> None:
-        _bloom_set(self.bits, hashes, self.m)
-
-    def maybe_contains(self, hashes: np.ndarray) -> np.ndarray:
-        return _bloom_test(self.bits, hashes, self.m)
-
-
 _DELTA_SCHEMA = "shard int, bitmap binary, n long"
 
 
@@ -157,13 +151,24 @@ def _hash_and_shard(col: pd.Series, n_shards: int) -> tuple[np.ndarray, np.ndarr
 
 def _bloom_fs(bloom_dir: str):
     """(pyarrow FileSystem, base path) for the bloom dir — handles DFS
-    URIs (s3://, hdfs://, ...) as well as local paths, so file-mode bloom
-    reads work wherever the Spark writer could put the files."""
+    URIs (s3://, hdfs://, ...), ``file:/...`` URIs (a warehouse on a
+    shared mount) and plain local paths, so file-mode bloom reads work
+    wherever the Spark writer could put the files."""
     from pyarrow import fs as pafs
 
-    if "://" in bloom_dir:
+    if "://" in bloom_dir or bloom_dir.startswith("file:"):
         return pafs.FileSystem.from_uri(bloom_dir)
     return pafs.LocalFileSystem(), bloom_dir
+
+
+def _bloom_home(spark: SparkSession, table: str) -> str:
+    """``<spark.sql.warehouse.dir>/<table>_bloom``: the filter files sit
+    next to the seen table, so every executor that can read the table can
+    read them. A local session gets a plain path."""
+    wh = spark.conf.get("spark.sql.warehouse.dir").rstrip("/")
+    if spark.sparkContext.master.startswith("local") and wh.startswith("file:"):
+        wh = urlsplit(wh).path
+    return f"{wh}/{table}_bloom"
 
 
 def _list_bloom_files(bloom_dir: str, shard: int | None = None):
@@ -199,23 +204,12 @@ class SeenSet:
         spark: SparkSession,
         n_shards: int = 32,
         use_bloom: bool = True,
-        expected_per_shard: int = 1 << 16,
-        bloom_storage: str = "broadcast",
-        bloom_dir: str | None = None,
         compact_every: int | None = None,
     ):
-        """``bloom_storage``:
-
-        * ``"broadcast"`` (default) — per-shard bitmaps are OR-merged on
-          the driver and broadcast; right up to ~100 MB of filters.
-        * ``"files"`` — the design-point mechanism for the 10^10-URL tier
-          (~15 GB of filters, BASELINE.md): the build pass WRITES each
-          generation's per-shard bitmap deltas as parquet partitioned by
-          shard id, and membership tasks load exactly their own shard's
-          files (the candidate wave is hash-partitioned by shard first).
-          The driver never holds a bitmap. ``bloom_dir`` must be visible
-          to every executor (a DFS path on a real cluster; defaults to a
-          local temp dir here).
+        """``bloom_storage`` follows the filters' size (module docstring):
+        ``"broadcast"`` while ``n_shards`` filters of ``m`` bits fit
+        ``_BROADCAST_BLOOM_BYTES``, ``"files"`` above it, with the filter
+        files under ``bloom_dir``, next to the seen table in the warehouse.
 
         ``compact_every``: after this many appends, rewrite the bucketed
         table (and, in files mode, the bloom delta files) into one file
@@ -225,24 +219,18 @@ class SeenSet:
         ``None`` = never compact (sandbox default; a 64-generation crawl
         accumulates ≤ 64 × n_shards small files, which is harmless here).
         """
-        if bloom_storage not in ("broadcast", "files"):
-            raise ValueError(f"unknown bloom_storage: {bloom_storage!r}")
         self.spark = spark
         self.n_shards = n_shards
         # tasks per shard-keyed shuffle; n_shards stays the bucket and
         # bloom-shard count
         self.n_tasks = _shard_tasks(n_shards, spark.sparkContext.defaultParallelism)
         self.use_bloom = use_bloom
-        self.bloom_storage = bloom_storage
-        self.m = _bloom_m(expected_per_shard)
+        self.m = _bloom_m(1 << 16)
+        nbytes = n_shards * ((self.m + 7) // 8)
+        self.bloom_storage = "broadcast" if nbytes <= _BROADCAST_BLOOM_BYTES else "files"
         self.table = f"eget_seen_{uuid.uuid4().hex[:12]}"
         self._created = False
-        import os as _os
-        import tempfile as _tempfile
-
-        self.bloom_dir = bloom_dir or _os.path.join(
-            _tempfile.gettempdir(), f"{self.table}_bloom"
-        )
+        self.bloom_dir = _bloom_home(spark, self.table)
         self._bloom_written = False
         # cached post-append file listing (files mode): the next append's
         # "before" snapshot, so count maintenance lists the dir once per
@@ -253,11 +241,11 @@ class SeenSet:
         # (broadcast mode only; files mode never materializes them here)
         self.bits: np.ndarray | None = (
             np.zeros((n_shards, (self.m + 7) // 8), dtype=np.uint8)
-            if use_bloom and bloom_storage == "broadcast"
+            if use_bloom and self.bloom_storage == "broadcast"
             else None
         )
         self._bc = None  # current broadcast of self.bits
-        self.count = 0
+        self.count = 0  # URLs added to the filters (bloom mode only)
         self.compact_every = compact_every
         self._appends = 0  # appends since the last compaction
         self._compactions = 0
@@ -365,8 +353,8 @@ class SeenSet:
             if self.bloom_storage == "files":
                 # design-point path: bitmap deltas land NEXT TO the table,
                 # partitioned by shard id; no bitmap ever reaches the
-                # driver. Membership tasks (_filter_unseen_files) load
-                # exactly their shard's files.
+                # driver. Membership tasks (_bloom_loader) load exactly
+                # their shards' files.
                 before = self._bloom_files
                 if before is None:
                     _, before = (
@@ -402,8 +390,6 @@ class SeenSet:
                 if self._bc is not None:
                     self._bc.unpersist()
                 self._bc = self.spark.sparkContext.broadcast(self.bits)
-        else:
-            self.count += delta.count()
 
         self._appends += 1
         if self.compact_every is not None and self._appends >= self.compact_every:
@@ -487,7 +473,8 @@ class SeenSet:
         Bloom prefilter splits candidates into definitely-new (bypass the
         join) and maybe-seen (exact anti-join); the union is exact. The
         anti-join's right side is the bucketed table scan — no exchange on
-        the accumulated set.
+        the accumulated set. Without usable filters (``_bloom_loader``
+        gives None) every candidate takes the anti-join.
 
         CONTRACT: ``cand``'s lineage must be DETERMINISTIC (or already
         materialized — the crawl loop always passes a localCheckpoint'ed
@@ -497,30 +484,27 @@ class SeenSet:
         a nondeterministic input could send a row down both or neither
         branch."""
         self.barrier()
-        if not self._created or self.count == 0:
-            if not self._created and self.count == 0:
-                return cand  # nothing seen yet
-            # no distinct(): anti-join semantics ignore right-side dups
-            return cand.join(self.df.select(hash_col), on=hash_col, how="left_anti")
+        if not self._created:
+            return cand  # nothing seen yet
+        # no distinct(): anti-join semantics ignore right-side dups
+        seen_side = self.df.select(hash_col)
+        load = self._bloom_loader()
+        if load is None:
+            return cand.join(seen_side, on=hash_col, how="left_anti")
 
-        if self.bits is None or self._bc is None:
-            if (
-                self.use_bloom
-                and self.bloom_storage == "files"
-                and self._bloom_written
-            ):
-                return self._filter_unseen_files(cand, hash_col)
-            return cand.join(self.df.select(hash_col), on=hash_col, how="left_anti")
-
-        bc = self._bc
         n_shards, m = self.n_shards, self.m
-
+        if self.bloom_storage == "files":
+            # route each row to its shard's task (same pmod key the build
+            # pass used, so each shard's file set is loaded by one task)
+            cand = cand.repartition(
+                self.n_tasks, F.pmod(F.col(hash_col), F.lit(n_shards))
+            )
         maybe_schema = T.StructType(
             list(cand.schema.fields) + [T.StructField("__maybe_seen", T.BooleanType())]
         )
 
         def mark(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            bits = bc.value
+            bits_for = load()
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
@@ -528,34 +512,41 @@ class SeenSet:
                 res = np.zeros(len(pdf), dtype=bool)
                 for s in np.unique(shard):
                     msk = shard == s
-                    res[msk] = _bloom_test(bits[s], h[msk], m)
+                    res[msk] = _bloom_test(bits_for(int(s)), h[msk], m)
                 # shallow column-add (no deep copy of the url/html
                 # payload columns — they can dominate memory bandwidth)
                 yield pdf.assign(__maybe_seen=res)
 
         marked = cand.mapInPandas(mark, maybe_schema)
-        # no checkpoint: the two union branches re-run the (cheap, pure-
-        # numpy) bloom mark instead of paying a wave-sized materialization
-        # barrier per generation; cand is always a checkpointed parent, so
-        # both branches see identical data
         fresh = marked.filter(~F.col("__maybe_seen")).drop("__maybe_seen")
         maybe = marked.filter(F.col("__maybe_seen")).drop("__maybe_seen")
-        checked = maybe.join(self.df.select(hash_col), on=hash_col, how="left_anti")
+        checked = maybe.join(seen_side, on=hash_col, how="left_anti")
         return fresh.unionByName(checked)
 
-    def _filter_unseen_files(self, cand: DataFrame, hash_col: str) -> DataFrame:
-        """File-backed bloom membership (the 10^10-URL design point): the
-        wave is hash-partitioned by shard id into k tasks (``_shard_tasks``),
-        so each task loads and OR-merges ONLY its own shards' bitmap delta
-        files (parquet under ``bloom_dir/shard=<s>/``) — one ~100 KB-scale
-        read per shard per wave, independent of total filter size. The
-        shuffle this adds is wave-sized (the broadcast variant has none);
-        at the design point that trade is forced: ~15 GB of filters cannot
-        be broadcast. Exactness is unchanged — "maybe seen" still goes
-        through the bucketed anti-join."""
-        n_shards, m = self.n_shards, self.m
+    def _bloom_loader(self):
+        """A task-side factory: called once per membership task, it returns
+        ``bits_for(shard)``, that shard's filter. None when there is no
+        filter to trust: Bloom off, nothing added yet, or (files mode) no
+        filter file visible to the driver.
+
+        Broadcast mode reads the broadcast stacked bitmaps. Files mode
+        loads and OR-merges a shard's bitmap delta files (parquet under
+        ``bloom_dir/shard=<s>/``) the first time the task meets the shard
+        — one ~100 KB-scale read per shard per wave, independent of total
+        filter size."""
+        if not self.use_bloom or self.count == 0:
+            return None
+        if self.bloom_storage == "broadcast":
+            bc = self._bc
+
+            def load_broadcast():
+                bits = bc.value
+                return lambda s: bits[s]
+
+            return load_broadcast
+
         bloom_dir = self.bloom_dir
-        nbytes = (m + 7) // 8
+        nbytes = (self.m + 7) // 8
 
         # fail-safe: a zero bitmap marks everything "definitely new" and
         # BYPASSES the exact join — the one direction a bloom must never
@@ -571,7 +562,7 @@ class SeenSet:
                 "to the exact anti-join for this wave",
                 stacklevel=2,
             )
-            return cand.join(self.df.select(hash_col), on=hash_col, how="left_anti")
+            return None
 
         # ADVICE r3: enumerate the per-shard file manifest ON THE DRIVER and
         # close over it — an executor that cannot read the dir (mis-mounted
@@ -588,11 +579,7 @@ class SeenSet:
             if mt:
                 shard_manifest.setdefault(int(mt.group(1)), []).append(p)
 
-        maybe_schema = T.StructType(
-            list(cand.schema.fields) + [T.StructField("__maybe_seen", T.BooleanType())]
-        )
-
-        def mark(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def load_files():
             import pyarrow.parquet as pq
 
             loaded: dict[int, np.ndarray] = {}
@@ -612,28 +599,9 @@ class SeenSet:
                     loaded[s] = bm
                 return bm
 
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                h, shard = _hash_and_shard(pdf[hash_col], n_shards)
-                res = np.zeros(len(pdf), dtype=bool)
-                for s in np.unique(shard):
-                    msk = shard == s
-                    res[msk] = _bloom_test(bits_for(int(s)), h[msk], m)
-                # shallow column-add (no deep copy of the url/html
-                # payload columns — they can dominate memory bandwidth)
-                yield pdf.assign(__maybe_seen=res)
+            return bits_for
 
-        # route each row to its shard's task (same pmod key the build pass
-        # used, so each shard's file set is loaded by one task)
-        cand2 = cand.repartition(
-            self.n_tasks, F.pmod(F.col(hash_col), F.lit(n_shards))
-        )
-        marked = cand2.mapInPandas(mark, maybe_schema)
-        fresh = marked.filter(~F.col("__maybe_seen")).drop("__maybe_seen")
-        maybe = marked.filter(F.col("__maybe_seen")).drop("__maybe_seen")
-        checked = maybe.join(self.df.select(hash_col), on=hash_col, how="left_anti")
-        return fresh.unionByName(checked)
+        return load_files
 
     def merged_file_bits(self) -> np.ndarray:
         """Driver-side OR-merge of every written bitmap delta file —

@@ -410,8 +410,8 @@ ORACLES["bfs_order_priority"] = _bfs_priority_sql()
 # page's links expand in, so depth varies within a wave and the per-host
 # counts accrue on the loop's generations, not BFS depths. The oracle
 # unrolls the full generation loop (admission → schedule → eligible/
-# deferred split → expand ELIGIBLE only); the engine runs with
-# politeness_salt="md5" so the salt-group assignment is replayable in SQL.
+# deferred split → expand ELIGIBLE only); the engine's schedule salt is
+# md5-derived, so the salt-group assignment is replayable in SQL.
 # Only host0 carries a Crawl-delay (2 s) — its fetches spread across
 # generations; every other host's delay is 0 (always eligible).
 # ---------------------------------------------------------------------------
@@ -604,9 +604,9 @@ ORACLES["md_clean"] = (
     "SELECT doc_id, '# Title ' || text || '  -x end' AS cleaned FROM documents"
 )
 
-# salted politeness slots: salt = md5-derived (mirrors the query's
-# salt_expr); fetch_time = ((rank_within(host,salt) - 1) * n_salts + salt)
-# * crawl_delay (politeness.py:16-20), window 10s, delay 2s, n_salts 4
+# salted politeness slots: salt = md5-derived (mirrors
+# politeness.salted_fetch_schedule); fetch_time = ((rank_within(host,salt) - 1) * n_salts + salt)
+# * crawl_delay (politeness.py docstring), window 10s, delay 2s, n_salts 4
 ORACLES["politeness_schedule"] = f"""
 WITH {PAGES}, {LINKS},
 cand AS (

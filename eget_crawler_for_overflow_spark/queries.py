@@ -401,7 +401,6 @@ def q_bfs_order_priority_politeness(spark, sf_dir):
             use_bloom=True,
             crawl_delay_window=PP_WINDOW,
             n_salts=PP_NSALTS,
-            politeness_salt="md5",
             priority_depth_weight=PP_W_DEPTH,
             priority_host_weight=PP_W_HOST,
             max_generations=PP_GENS,
@@ -446,7 +445,6 @@ def q_bfs_priority_politeness_budget(spark, sf_dir):
             use_bloom=True,
             crawl_delay_window=PP_WINDOW,
             n_salts=PP_NSALTS,
-            politeness_salt="md5",
             priority_depth_weight=PP_W_DEPTH,
             priority_host_weight=PP_W_HOST,
             max_generations=PP_GENS,
@@ -560,9 +558,8 @@ def q_robots_gate(spark, sf_dir):
 def q_politeness_schedule(spark, sf_dir):
     """A4/W2: salted per-host fetch slots over wave-1 candidates —
     eligible-vs-deferred split for a 10s logical window with crawl-delay 2s
-    on every host. Salt = md5-derived (SQL-expressible) so the DuckDB
-    oracle replays the slot formula exactly; the engine default stays
-    xxhash64 (politeness.py salt_expr)."""
+    on every host. The salt is md5-derived (SQL-expressible), so the DuckDB
+    oracle replays the slot formula exactly (politeness.py)."""
     from .operators.politeness import salted_fetch_schedule
 
     link_udf = make_link_udf()
@@ -578,13 +575,7 @@ def q_politeness_schedule(spark, sf_dir):
         .withColumn("host", F.parse_url(F.col("url"), F.lit("HOST")))
         .withColumn("crawl_delay", F.lit(2.0))
     )
-    salt = F.pmod(
-        F.conv(F.substring(F.md5(F.col("url")), 1, 2), 16, 10).cast("long"),
-        F.lit(4),
-    )
-    sched = salted_fetch_schedule(
-        cand, order_cols=["seq", "url"], n_salts=4, salt_expr=salt
-    )
+    sched = salted_fetch_schedule(cand, order_cols=["seq", "url"], n_salts=4)
     return sched.groupBy("host").agg(
         F.sum(F.when(F.col("fetch_time") < 10.0, 1).otherwise(0)).alias(
             "n_eligible"

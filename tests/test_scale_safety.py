@@ -18,6 +18,7 @@ from pyspark.sql.classic.dataframe import DataFrame  # concrete impl (Spark 4)
 
 from eget_crawler_for_overflow_spark import pagemodel as pm
 from eget_crawler_for_overflow_spark.fixtures import load_pages
+from eget_crawler_for_overflow_spark.operators import seen as seen_mod
 from eget_crawler_for_overflow_spark.operators.frontier import (
     CrawlConfig,
     run_crawl,
@@ -48,11 +49,10 @@ def test_no_wave_sized_collect(spark, pages, monkeypatch, bloom_storage):
         return rows
 
     monkeypatch.setattr(DataFrame, "collect", spy)
+    if bloom_storage == "files":  # files mode: NO bitmap collect at all
+        monkeypatch.setattr(seen_mod, "_BROADCAST_BLOOM_BYTES", 0)
     seeds = [pm.url_of(i, N_HOSTS) for i in range(8)]
-    cfg = CrawlConfig(
-        max_depth=4, max_pages=None, same_domain=False,
-        bloom_storage=bloom_storage,  # files mode: NO bitmap collect at all
-    )
+    cfg = CrawlConfig(max_depth=4, max_pages=None, same_domain=False)
     res = run_crawl(spark, pages, seeds, cfg)
     # r7: metrics aggregation is lazy — in files mode the loop itself now
     # runs ZERO driver collects. Materialize the metrics surface inside
@@ -72,8 +72,6 @@ def test_no_wave_sized_collect(spark, pages, monkeypatch, bloom_storage):
 def test_seen_table_is_append_only(spark, pages):
     """Each generation appends O(delta) files to the bucketed seen table;
     nothing rewrites earlier generations' files."""
-    from eget_crawler_for_overflow_spark.operators import seen as seen_mod
-
     events = []
     orig_add = seen_mod.SeenSet.add
 

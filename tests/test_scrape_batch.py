@@ -329,6 +329,29 @@ def test_scrape_batch_bucketed_pages_no_exchange(spark, sf001):
 # ---------------------------------------------------------------------------
 
 
+def test_null_option_flags_give_default_envelope_without_warnings():
+    """Nullable booleans arrive from Arrow as object dtype holding None:
+    a null includeRawHtml / includeScreenshot means False, and mapping it
+    must not trip pandas' object-dtype downcasting warning."""
+    import warnings
+
+    from eget_crawler_for_overflow_spark.functions.extract import scrape_envelope_udf
+
+    html = pd.Series([b"<html><head><title>T</title></head><body><p>hi</p></body></html>"])
+    url = pd.Series(["https://h.example/x"])
+    nulls = pd.Series([None], dtype=object)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        got = scrape_envelope_udf.func(html, url, nulls, nulls, nulls, nulls, nulls)
+    want = scrape_envelope_udf.func(
+        html, url, pd.Series([True]), nulls, nulls,
+        pd.Series([False]), pd.Series([False]),
+    )
+    pd.testing.assert_frame_equal(got, want)
+    assert got["success"][0] and got["raw_html"][0] is None
+    assert got["warning"][0] is None
+
+
 def test_scrape_one_never_raises_on_hostile_inputs():
     """Driver-side fuzz of the per-row worker: arbitrary tag soup, raw
     binary, and hostile option values must produce a success or error

@@ -2,33 +2,42 @@
 
 import numpy as np
 
-from eget_crawler_for_overflow_spark.operators.seen import BloomShard
+from eget_crawler_for_overflow_spark.operators.seen import (
+    _bloom_m,
+    _bloom_set,
+    _bloom_test,
+)
+
+
+def _filter(expected_n):
+    m = _bloom_m(expected_n)
+    return np.zeros((m + 7) // 8, dtype=np.uint8), m
 
 
 def test_no_false_negatives():
-    b = BloomShard(expected_n=10_000)
+    bits, m = _filter(10_000)
     rng = np.random.default_rng(42)
     keys = rng.integers(0, 2**63, 10_000, dtype=np.int64).view(np.uint64)
-    b.add(keys)
-    assert b.maybe_contains(keys).all()
+    _bloom_set(bits, keys, m)
+    assert _bloom_test(bits, keys, m).all()
 
 
 def test_false_positive_rate_reasonable():
-    b = BloomShard(expected_n=10_000)
+    bits, m = _filter(10_000)
     rng = np.random.default_rng(7)
     keys = rng.integers(0, 2**62, 10_000, dtype=np.int64).view(np.uint64)
-    b.add(keys)
+    _bloom_set(bits, keys, m)
     probe = (
         rng.integers(2**62, 2**63, 20_000, dtype=np.int64).view(np.uint64)
     )
-    fpp = b.maybe_contains(probe).mean()
+    fpp = _bloom_test(bits, probe, m).mean()
     assert fpp < 0.01  # 13 bits/key, k=7 → ~1e-3 theoretical
 
 
 def test_empty_shard():
-    b = BloomShard(expected_n=100)
-    assert not b.maybe_contains(np.array([1, 2, 3], dtype=np.uint64)).any()
-    assert b.maybe_contains(np.array([], dtype=np.uint64)).shape == (0,)
+    bits, m = _filter(100)
+    assert not _bloom_test(bits, np.array([1, 2, 3], dtype=np.uint64), m).any()
+    assert _bloom_test(bits, np.array([], dtype=np.uint64), m).shape == (0,)
 
 
 # ---------------------------------------------------------------------------
@@ -44,9 +53,20 @@ from eget_crawler_for_overflow_spark.operators.frontier import (  # noqa: E402
     CrawlConfig,
     run_crawl,
 )
+from eget_crawler_for_overflow_spark.operators import seen as seen_mod  # noqa: E402
 from eget_crawler_for_overflow_spark.operators.seen import SeenSet  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
+
+
+def _files_seen(spark, monkeypatch, **kw):
+    """A SeenSet whose filters take the files path: the broadcast budget
+    is 0 bytes while it is built."""
+    with monkeypatch.context() as mp:
+        mp.setattr(seen_mod, "_BROADCAST_BLOOM_BYTES", 0)
+        s = SeenSet(spark, **kw)
+    assert s.bloom_storage == "files" and s.bits is None
+    return s
 
 
 @pytest.fixture(scope="module")
@@ -54,7 +74,7 @@ def pages(spark):
     return load_pages(spark, SF)
 
 
-def test_file_bits_equal_broadcast_bits(spark, pages):
+def test_file_bits_equal_broadcast_bits(spark, pages, monkeypatch):
     """Same deltas through both storage mechanisms -> identical bitmaps
     (the files are just the un-merged broadcast, relocated executor-side)."""
     delta = (
@@ -62,8 +82,8 @@ def test_file_bits_equal_broadcast_bits(spark, pages):
         .withColumn("url_hash", F.xxhash64("url"))
         .withColumn("host", F.lit("h"))
     )
-    bc = SeenSet(spark, n_shards=8, use_bloom=True, bloom_storage="broadcast")
-    fi = SeenSet(spark, n_shards=8, use_bloom=True, bloom_storage="files")
+    bc = SeenSet(spark, n_shards=8, use_bloom=True)
+    fi = _files_seen(spark, monkeypatch, n_shards=8, use_bloom=True)
     try:
         half = delta.filter(F.col("url_hash") % 2 == 0)
         rest = delta.filter(F.col("url_hash") % 2 != 0)
@@ -77,15 +97,15 @@ def test_file_bits_equal_broadcast_bits(spark, pages):
         fi.drop()
 
 
-def test_filter_unseen_files_equals_broadcast(spark, pages):
+def test_files_mode_membership_equals_broadcast(spark, pages, monkeypatch):
     cand = (
         pages.select("url")
         .withColumn("url_hash", F.xxhash64("url"))
         .withColumn("host", F.lit("h"))
     )
     seenpart = cand.filter(F.col("url_hash") % 3 == 0)
-    bc = SeenSet(spark, n_shards=8, use_bloom=True, bloom_storage="broadcast")
-    fi = SeenSet(spark, n_shards=8, use_bloom=True, bloom_storage="files")
+    bc = SeenSet(spark, n_shards=8, use_bloom=True)
+    fi = _files_seen(spark, monkeypatch, n_shards=8, use_bloom=True)
     try:
         bc.add(seenpart)
         fi.add(seenpart)
@@ -102,23 +122,81 @@ def test_filter_unseen_files_equals_broadcast(spark, pages):
         fi.drop()
 
 
-def test_crawl_identical_under_file_blooms(spark, pages):
+def test_crawl_identical_under_file_blooms(spark, pages, monkeypatch):
     """Full engine crawl: file-backed blooms must not change one admitted
     row or seq (bloom is a pure prefilter; the anti-join is the truth)."""
     _, n_hosts = pm.sizing(SF)
     seeds = [pm.url_of(i, n_hosts) for i in (0, 2, 4)]
 
-    def admitted(storage):
-        cfg = CrawlConfig(
-            max_depth=3, max_pages=None, use_bloom=True, bloom_storage=storage
+    def admitted(broadcast_bytes):
+        cfg = CrawlConfig(max_depth=3, max_pages=None, use_bloom=True)
+        with monkeypatch.context() as mp:
+            mp.setattr(seen_mod, "_BROADCAST_BLOOM_BYTES", broadcast_bytes)
+            res = run_crawl(spark, pages, seeds, cfg)
+            return sorted(
+                (r["url"], r["depth"], r["enqueue_seq"])
+                for r in res.admitted.collect()
+            )
+
+    assert admitted(0) == admitted(seen_mod._BROADCAST_BLOOM_BYTES)
+
+
+def test_storage_follows_filter_size(spark):
+    """The stacked filters pick the mechanism: 32 shards (~3 MB) are
+    broadcast; 1024 shards (~109 MB) go to files, and the driver never
+    allocates their bitmaps."""
+    small = SeenSet(spark, n_shards=32)
+    big = SeenSet(spark, n_shards=1024)
+    try:
+        assert small.bloom_storage == "broadcast"
+        assert small.bits.shape == (32, (small.m + 7) // 8)
+        assert big.bloom_storage == "files"
+        assert big.bits is None
+    finally:
+        small.drop()
+        big.drop()
+
+
+def test_default_bloom_dir_is_under_the_warehouse(spark, pages, monkeypatch):
+    """Filter files sit next to the seen table, in the warehouse every
+    executor reads the table from — not in the driver's temp dir."""
+    import glob
+
+    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    s = _files_seen(spark, monkeypatch, n_shards=4)
+    try:
+        assert s.bloom_dir == f"{wh.rstrip('/')}/{s.table}_bloom"
+        s.add(
+            pages.select("url")
+            .withColumn("url_hash", F.xxhash64("url"))
+            .withColumn("host", F.lit("h"))
+            .limit(50)
         )
-        res = run_crawl(spark, pages, seeds, cfg)
-        return sorted(
-            (r["url"], r["depth"], r["enqueue_seq"])
-            for r in res.admitted.collect()
+        assert glob.glob(f"{s.bloom_dir}/shard=*/*.parquet")
+    finally:
+        s.drop()
+
+
+def test_bloom_paths_keep_file_uris_off_local_sessions():
+    """A ``file:`` warehouse stays a URI on a cluster (a shared mount) and
+    pyarrow opens it as a local file system; a local session gets a plain
+    path."""
+    from types import SimpleNamespace
+
+    from pyarrow import fs as pafs
+
+    def session(master):
+        return SimpleNamespace(
+            conf=SimpleNamespace(get=lambda key: "file:/mnt/wh/"),
+            sparkContext=SimpleNamespace(master=master),
         )
 
-    assert admitted("files") == admitted("broadcast")
+    assert seen_mod._bloom_home(session("local[4]"), "t") == "/mnt/wh/t_bloom"
+    cluster = seen_mod._bloom_home(session("spark://h:7077"), "t")
+    assert cluster == "file:/mnt/wh/t_bloom"
+    fsys, base = seen_mod._bloom_fs(cluster)
+    assert isinstance(fsys, pafs.LocalFileSystem)
+    assert base == "/mnt/wh/t_bloom"
 
 
 # ---------------------------------------------------------------------------
@@ -139,19 +217,17 @@ def _table_files(spark, table):
     ]
 
 
-def test_compaction_bounds_file_count_and_preserves_membership(spark, pages):
+def test_compaction_bounds_file_count_and_preserves_membership(
+    spark, pages, monkeypatch
+):
     n_shards, every = 4, 3
     delta = (
         pages.select("url")
         .withColumn("url_hash", F.xxhash64("url"))
         .withColumn("host", F.lit("h"))
     )
-    s = SeenSet(
-        spark,
-        n_shards=n_shards,
-        use_bloom=True,
-        bloom_storage="files",
-        compact_every=every,
+    s = _files_seen(
+        spark, monkeypatch, n_shards=n_shards, use_bloom=True, compact_every=every
     )
     tables, file_counts = [], []
     try:
@@ -204,7 +280,7 @@ def test_crawl_identical_under_compaction(spark, pages):
     assert admitted(2) == admitted(None)
 
 
-def test_files_mode_fails_loud_on_unreadable_manifest_file(spark, pages):
+def test_files_mode_fails_loud_on_unreadable_manifest_file(spark, pages, monkeypatch):
     """ADVICE r3: the per-shard file manifest is enumerated on the DRIVER
     and closed over into the membership task; a manifest file an executor
     cannot read must raise — never degrade to an all-zero bitmap that
@@ -218,7 +294,7 @@ def test_files_mode_fails_loud_on_unreadable_manifest_file(spark, pages):
         .withColumn("url_hash", F.xxhash64("url"))
         .withColumn("host", F.lit("h"))
     )
-    s = SeenSet(spark, n_shards=4, use_bloom=True, bloom_storage="files")
+    s = _files_seen(spark, monkeypatch, n_shards=4, use_bloom=True)
     try:
         s.add(cand.limit(200))
         out = s.filter_unseen(cand)  # manifest captured at plan time
@@ -232,7 +308,7 @@ def test_files_mode_fails_loud_on_unreadable_manifest_file(spark, pages):
         s.drop()
 
 
-def test_long_crawl_compaction_24_generations(spark, pages):
+def test_long_crawl_compaction_24_generations(spark, pages, monkeypatch):
     """Design-point generation count (VERDICT r3 item 7): 24 files-mode
     appends with compact_every=4 — file count stays bounded by
     n_shards × (compact_every + 1) throughout, bloom delta files stay
@@ -244,15 +320,10 @@ def test_long_crawl_compaction_24_generations(spark, pages):
         .withColumn("url_hash", F.xxhash64("url"))
         .withColumn("host", F.lit("h"))
     )
-    fi = SeenSet(
-        spark,
-        n_shards=n_shards,
-        use_bloom=True,
-        bloom_storage="files",
-        compact_every=every,
+    fi = _files_seen(
+        spark, monkeypatch, n_shards=n_shards, use_bloom=True, compact_every=every
     )
-    bc = SeenSet(spark, n_shards=n_shards, use_bloom=True,
-                 bloom_storage="broadcast")
+    bc = SeenSet(spark, n_shards=n_shards, use_bloom=True)
     try:
         import glob
 
@@ -282,9 +353,6 @@ def test_long_crawl_compaction_24_generations(spark, pages):
 # ---------------------------------------------------------------------------
 # shard-keyed shuffles run in k = _shard_tasks(n_shards, parallelism) tasks
 # ---------------------------------------------------------------------------
-
-from eget_crawler_for_overflow_spark.operators import seen as seen_mod  # noqa: E402
-
 
 def test_shard_tasks_is_largest_divisor_within_parallelism():
     assert seen_mod._shard_tasks(32, 3) == 2
@@ -346,8 +414,8 @@ def test_shard_fanout_layout_bits_and_task_count(
         rows.filter(F.col("url_hash") % 3 == 0),
         rows.filter(F.col("url_hash") % 3 != 0),
     ]
-    bc = SeenSet(spark, n_shards=n_shards, bloom_storage="broadcast")
-    fi = SeenSet(spark, n_shards=n_shards, bloom_storage="files")
+    bc = SeenSet(spark, n_shards=n_shards)
+    fi = _files_seen(spark, monkeypatch, n_shards=n_shards)
     try:
         ref = np.zeros_like(bc.bits)
         for gen, part in enumerate(parts):
